@@ -3538,8 +3538,8 @@ def sitemap_parse_q(spark, sf_dir):
 def crawl_trace(spark, sf_dir):
     """End-to-end crawl over the deterministic synthetic corpus; the trace
     is pinned exactly against the sequential oracle in
-    tests/test_crawl_parity.py (not SQL-expressible: iterative driver loop
-    + Bloom state)."""
+    tests/test_crawl_parity.py (not SQL-expressible: iterative driver
+    loop)."""
     import os
 
     from don_crawler_spark.plans.checkpoint import CheckpointStore

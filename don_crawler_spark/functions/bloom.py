@@ -9,11 +9,18 @@ only its bucket's rows (bucket-local work, no broadcast of the whole
 filter — at 10^10 URLs a monolithic filter would be ~20 GB, but a bucket
 is ~20 GB / n_buckets and lives next to its frontier partition).
 
-EXACTNESS (SURVEY.md §7 risk 4): Bloom answers are used ONLY as a
+USE: the crawl round does not probe these filters today. Its one seen
+check is the exact anti-join at round end (plans/round.py), which scans
+and shuffles the whole seen side every round, so a prefilter in front of
+it saves no work. A filter pays once a seen side too large to scan every
+round (a compacted seen table) lets it keep rows off the exact path. The
+kernels stay unit-tested and benchmarked for that case.
+
+EXACTNESS (SURVEY.md §7 risk 4): Bloom answers may only ever serve as a
 prefilter. `might_contain == False` rows are definitely new (Bloom has no
-false negatives) and skip the exact anti-join; `True` rows (seen or false
-positive) go through the exact anti-join against the seen table. The final
-seen-set is therefore exact regardless of the false-positive rate.
+false negatives) and may skip the exact anti-join; `True` rows (seen or
+false positive) must go through the exact anti-join against the seen
+table, so the seen-set stays exact regardless of the false-positive rate.
 
 Representation: table ``(bucket int, bits binary, n_items long)``, one row
 per bucket; ``bits`` is a fixed-size numpy bitset so round deltas OR-merge.

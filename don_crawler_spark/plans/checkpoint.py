@@ -13,8 +13,11 @@ Iceberg transaction appending to ``fetched``/``trace`` and replacing
 ``frontier`` — the protocol here mirrors those semantics.
 
 Layout:
-    {root}/round=K/{frontier,seen_delta,trace,fetched,metrics}.parquet/
+    {root}/round=K/{fetched_full,frontier,metrics}.parquet/
     {root}/manifest_K.json          <- commit record for round K
+
+``trace``, ``fetched`` and ``seen_delta`` are virtual: read-time
+projections of ``fetched_full`` (see ``CheckpointStore._VIRTUAL``).
 """
 
 from __future__ import annotations

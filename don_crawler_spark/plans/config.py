@@ -30,10 +30,11 @@ class CrawlConfig:
     max_depth: int = 50
     default_crawl_delay_ms: int = 1_000
     default_max_per_round: int = 100
-    # partitioned-Bloom prefilter for the seen anti-join. m_bits is per
-    # BUCKET and fixed so round deltas OR-merge; at 10^10 URLs you scale
-    # n_buckets (shards), not the per-shard size.
-    bloom_enabled: bool = True
+    # sizing of the bucket-sharded seen-set Bloom filter
+    # (functions/bloom.py; the crawl round does not probe it, see its
+    # module docstring). m_bits is per BUCKET and fixed so round deltas
+    # OR-merge; at 10^10 URLs you scale n_buckets (shards), not the
+    # per-shard size.
     bloom_buckets: int = 32
     bloom_m_bits: int = 1 << 20
     bloom_num_hashes: int = 7

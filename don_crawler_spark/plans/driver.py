@@ -16,7 +16,6 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from don_crawler_spark.functions.bloom import BLOOM_SCHEMA, make_merge_fn
 from don_crawler_spark.plans.checkpoint import CheckpointStore
 from don_crawler_spark.plans.config import CrawlConfig
 from don_crawler_spark.plans.round import frontier_from_seeds, run_round
@@ -78,6 +77,8 @@ def run_crawl(
 
     import os
 
+    import pyarrow.dataset as ds
+
     pages = spark.read.parquet(f"{corpus_dir}/pages.parquet")
     robots = spark.read.parquet(f"{corpus_dir}/robots.parquet")
     budgets = spark.read.parquet(f"{corpus_dir}/host_budgets.parquet")
@@ -85,11 +86,14 @@ def run_crawl(
     if os.path.exists(f"{corpus_dir}/transient.parquet"):
         transient = spark.read.parquet(f"{corpus_dir}/transient.parquet")
     redirects = None
-    if os.path.exists(f"{corpus_dir}/redirects.parquet"):
-        redirects = spark.read.parquet(f"{corpus_dir}/redirects.parquet")
-        # tolerate pre-redirect cached corpora AND empty tables alike
-        if redirects.isEmpty():
-            redirects = None
+    redirects_path = f"{corpus_dir}/redirects.parquet"
+    # tolerate pre-redirect cached corpora AND empty tables alike; the
+    # row count comes from parquet footers (no Spark job), for a single
+    # file and a part-file directory alike
+    if os.path.exists(redirects_path) and ds.dataset(
+        redirects_path, format="parquet"
+    ).count_rows():
+        redirects = spark.read.parquet(redirects_path)
 
     summary = CrawlSummary()
     start_round = store.latest_round()
@@ -114,36 +118,6 @@ def run_crawl(
     frontier = store.read_table(spark, start_round, "frontier")
     seen = store.read_seen(spark, start_round) or _empty_seen(spark)
 
-    def _read_bloom(rnd_: int) -> DataFrame | None:
-        if not cfg.bloom_enabled:
-            return None
-        import os
-
-        path = store.table_path(rnd_, "seen_bloom")
-        if os.path.exists(path):
-            return spark.read.parquet(path)
-        # INVARIANT: the Bloom table must be a superset of the seen-set
-        # (false negatives would let seen URLs bypass the exact anti-join).
-        # Missing table (fresh crawl, or resume from a non-Bloom run) ->
-        # rebuild from the exact seen deltas.
-        seen_all = store.read_seen(spark, rnd_)
-        if seen_all is None:
-            return spark.createDataFrame([], BLOOM_SCHEMA)
-        delta_b = seen_all.select(
-            F.pmod(F.col("url_hash"), F.lit(cfg.bloom_buckets))
-            .cast("int")
-            .alias("bucket"),
-            "url_hash",
-        )
-        return (
-            delta_b.groupBy("bucket")
-            .cogroup(spark.createDataFrame([], BLOOM_SCHEMA).groupBy("bucket"))
-            .applyInPandas(
-                make_merge_fn(cfg.bloom_m_bits, cfg.bloom_num_hashes), BLOOM_SCHEMA
-            )
-        )
-
-    bloom = _read_bloom(start_round)
     n_frontier = store.row_count(start_round, "frontier")
 
     # Smallest possible per-host budget a given round can produce
@@ -215,7 +189,7 @@ def run_crawl(
         t0 = time.monotonic()
         out = run_round(
             cfg, rnd, frontier, seen, pages, robots, budgets,
-            bloom=bloom, transient=transient, redirects=redirects,
+            transient=transient, redirects=redirects,
             fetch_join=_choose_fetch_join(n_frontier, cfg),
             precut=_max_host_rows(frontier) > _min_budget(rnd),
         )
@@ -223,42 +197,19 @@ def run_crawl(
         # Materialize in dependency order; manifest commit is the txn point.
         # The fetched_full write runs FIRST and alone: it populates the
         # round's persisted frames (selected / enriched), which every
-        # other output reads. The remaining three outputs — frontier
-        # write, bloom fold+write, metrics aggregate — only consume
-        # those caches and are mutually independent, so they run as
-        # CONCURRENT jobs from a small thread pool (guide §2.6: actions
-        # are only sequential because the driver calls them
-        # sequentially); the next job's tasks back-fill executors freed
-        # by the previous job's straggler tail. The commit point is
-        # unchanged: all writes complete before the manifest appears, so
-        # a crash mid-round still resumes from the previous round.
+        # other output reads. The remaining two outputs — frontier
+        # write, metrics aggregate — only consume those caches and are
+        # mutually independent, so they run as CONCURRENT jobs from a
+        # small thread pool (guide §2.6: actions are only sequential
+        # because the driver calls them sequentially); the next job's
+        # tasks back-fill executors freed by the previous job's straggler
+        # tail. The commit point is unchanged: all writes complete before
+        # the manifest appears, so a crash mid-round still resumes from
+        # the previous round.
         store.write_table(out.fetched_full, rnd, "fetched_full")
 
         def _write_frontier() -> None:
             store.write_table(out.new_frontier, rnd, "frontier")
-
-        def _write_bloom() -> None:
-            if not cfg.bloom_enabled:
-                return
-            # fold this round's new hashes into the bucket-sharded
-            # filters — from the PERSISTED round output, not a parquet
-            # re-read (each avoided re-scan is one less full job per
-            # round)
-            delta_b = out.fetched_full.filter(F.col("__seen_eligible")).select(
-                F.pmod(F.col("url_hash"), F.lit(cfg.bloom_buckets))
-                .cast("int")
-                .alias("bucket"),
-                "url_hash",
-            )
-            bloom_new = (
-                delta_b.groupBy("bucket")
-                .cogroup(bloom.groupBy("bucket"))
-                .applyInPandas(
-                    make_merge_fn(cfg.bloom_m_bits, cfg.bloom_num_hashes),
-                    BLOOM_SCHEMA,
-                )
-            )
-            store.write_table(bloom_new, rnd, "seen_bloom")
 
         def _metrics() -> list:
             # per-partition lineage/counters (metrics table): ONE
@@ -284,12 +235,10 @@ def run_crawl(
 
         from concurrent.futures import ThreadPoolExecutor
 
-        with ThreadPoolExecutor(max_workers=3) as pool:
+        with ThreadPoolExecutor(max_workers=2) as pool:
             f_frontier = pool.submit(_write_frontier)
-            f_bloom = pool.submit(_write_bloom)
             f_metrics = pool.submit(_metrics)
             f_frontier.result()
-            f_bloom.result()
             mrows = f_metrics.result()
         # write even when empty: tooling reads metrics for the terminal
         # round too (an empty round still leaves an empty metrics table)
@@ -329,6 +278,5 @@ def run_crawl(
         frontier = store.read_table(spark, rnd, "frontier")
         n_frontier = store.row_count(rnd, "frontier")
         seen = store.read_seen(spark, rnd)
-        bloom = _read_bloom(rnd)
 
     return summary

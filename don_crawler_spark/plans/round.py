@@ -4,11 +4,12 @@ This replaces the reference's goroutine pipeline (scan workers -> buffered
 channel -> process workers, crawler/crawler.go:156-195,642-669) with a
 Catalyst-planned dataflow:
 
-    frontier --dedup(url_hash)--> anti-join(seen) --> robots filter
+    frontier --dedup(url_hash)--> robots filter
         --> budget rank (per-host window) --> SELECTED | DEFERRED
     SELECTED --join(pages on url_hash)--> status/extract/links
         --> fetched_full (trace/fetched/seen-delta are projections)
-    DEFERRED ∪ new links --> next frontier
+    DEFERRED ∪ new links ∪ retries --anti-join(seen ∪ seen-delta)-->
+        next frontier
 
 Scale notes (the judge-facing design decisions):
 
@@ -19,7 +20,7 @@ Scale notes (the judge-facing design decisions):
   the big side). Sandbox runs use plain parquet + AQE.
 * The per-host budget window partitions by ``host`` — inherently skewed
   (a heavy domain dominates). The window input is the *frontier candidate
-  set*, already pruned by dedup/seen/robots; rank only needs the smallest
+  set*, already pruned by dedup/robots; rank only needs the smallest
   ``budget`` rows per host, so we pre-cut each host's candidates with a
   cheap salted partial top-k before the exact window (two-phase top-k:
   per (host, salt) local rank prunes to budget rows, then the exact
@@ -77,7 +78,6 @@ class RoundOutput:
     # projections of it (see CheckpointStore._VIRTUAL)
     fetched_full: DataFrame
     new_frontier: DataFrame  # FRONTIER_COLS
-    denied: DataFrame       # robots-denied rows this round
 
 
 def frontier_from_seeds(seeds: DataFrame) -> DataFrame:
@@ -177,7 +177,6 @@ def run_round(
     pages: DataFrame,
     robots: DataFrame,
     host_budgets: DataFrame,
-    bloom: DataFrame | None = None,
     persist: bool = True,
     transient: DataFrame | None = None,
     fetch_join: str = "broadcast",
@@ -187,8 +186,12 @@ def run_round(
     """Build the round-``rnd`` DAG. Nothing is executed here — the driver
     materializes the outputs (checkpoint) which triggers one job.
 
-    ``bloom``: optional bucket-sharded Bloom table (functions/bloom.py)
-    used as a prefilter in front of the exact seen anti-join.
+    The round checks the seen set once, at its end: the next frontier is
+    anti-joined against ``seen`` plus this round's seen delta, which is
+    exactly the seen set the driver reads back for the next round.
+    INVARIANT: ``frontier`` is disjoint from ``seen`` -- a frontier from a
+    committed round already passed that check, and a seed frontier meets
+    an empty seen set -- so the input needs no seen check of its own.
 
     ``fetch_join``: join strategy for selected-set x pages — "broadcast"
     (semi-join prune, selected set must fit an executor) or "shuffle"
@@ -199,36 +202,8 @@ def run_round(
     """
     f = _dedup_frontier(frontier)
 
-    # U4: seen-set anti-join. With a Bloom table available, probe the
-    # bucket-sharded filters first (cogrouped, bucket-local): rows the
-    # filter has never seen are definitely new and skip the exact
-    # anti-join; only the maybe-seen remainder shuffles into it. The
-    # exact join always confirms, so false positives cannot drop URLs.
-    if bloom is not None:
-        from don_crawler_spark.functions.bloom import make_probe_fn
-
-        probe_schema = (
-            "url_hash long, url string, host string, path string, "
-            "depth int, src_url string, attempts int, maybe_seen boolean"
-        )
-        bucket = F.pmod(F.col("url_hash"), F.lit(cfg.bloom_buckets)).cast("int")
-        probed = (
-            f.groupBy(bucket.alias("bucket"))
-            .cogroup(bloom.groupBy("bucket"))
-            .applyInPandas(
-                make_probe_fn(cfg.bloom_m_bits, cfg.bloom_num_hashes, FRONTIER_COLS),
-                probe_schema,
-            )
-        )
-        definitely_new = probed.filter(~F.col("maybe_seen")).drop("maybe_seen")
-        maybe = probed.filter(F.col("maybe_seen")).drop("maybe_seen")
-        confirmed_new = maybe.join(seen.select("url_hash"), "url_hash", "left_anti")
-        f = definitely_new.unionByName(confirmed_new)
-    else:
-        f = f.join(seen.select("url_hash"), "url_hash", "left_anti")
-
     # robots allow/deny (longest-prefix, broadcast dimension)
-    allowed, denied = apply_robots_filter(f, robots)
+    allowed, _denied = apply_robots_filter(f, robots)
 
     # politeness budget: broadcast host dimension + per-host ranked cut (T5)
     has_not_before = "not_before_ts" in host_budgets.columns
@@ -251,13 +226,13 @@ def run_round(
     # two-phase top-k: salted local rank prunes each host's candidates to
     # ≤ _BUDGET_PRECUT_SALTS x budget rows before the exact per-host window.
     # ``precut=False`` skips the salted pass entirely — the driver
-    # disables it for rounds whose frontier COUNT cannot exceed any
-    # host's budget (n_frontier <= min budget, read from parquet footers
-    # + the budgets dimension, same driver-side-metadata pattern as
-    # _choose_fetch_join): in that regime the pre-rank can prune nothing,
-    # so the extra window is pure cost. The selected/deferred row sets
-    # are identical either way (the exact per-host window re-applies the
-    # same budget cut).
+    # disables it for rounds in which no host's frontier rows can exceed
+    # its budget (the largest per-host frontier row count, from one small
+    # aggregate job per round in driver._max_host_rows, <= the smallest
+    # budget the round can produce): in that regime the pre-rank can
+    # prune nothing, so the extra window is pure cost. The
+    # selected/deferred row sets are identical either way (the exact
+    # per-host window re-applies the same budget cut).
     if precut:
         salt = F.pmod(F.col("url_hash"), F.lit(_BUDGET_PRECUT_SALTS))
         w_pre = Window.partitionBy("host", salt).orderBy("depth", "url_hash")
@@ -547,7 +522,9 @@ def run_round(
 
     # next frontier: deferred rows keep their place; new links join them;
     # retriable 503s requeue with attempts+1. All scrubbed against the
-    # updated seen-set (which excludes the retriable 503s by definition).
+    # updated seen-set (which excludes the retriable 503s by definition):
+    # the round's one seen check, and what makes the next round's input
+    # disjoint from its seen set.
     retry = enriched.filter(~F.col("__seen_eligible")).select(
         "url_hash",
         "url",
@@ -565,9 +542,10 @@ def run_round(
     # width — 300+ partitions of a politeness-bounded frontier), so the
     # checkpoint write would emit hundreds of tiny files and the next
     # round would pay the listing/open cost back (guide §6). Coalesce to
-    # 2x the session's parallelism: task merging only (no shuffle, the
-    # anti-join above keeps its width), scale-relative rather than a
-    # local constant.
+    # 2x the session's parallelism, scale-relative rather than a local
+    # constant. coalesce adds no shuffle, but it merges the anti-join's
+    # reduce partitions, so it caps the join's reduce-side task count at
+    # n_out (its map side is unchanged).
     n_out = 2 * frontier.sparkSession.sparkContext.defaultParallelism
     new_frontier = (
         deferred.select(FRONTIER_COLS)
@@ -580,5 +558,4 @@ def run_round(
     return RoundOutput(
         fetched_full=fetched_full,
         new_frontier=new_frontier,
-        denied=denied.select(FRONTIER_COLS),
     )

@@ -33,7 +33,6 @@ def main() -> None:
     ap.add_argument("--rounds", type=int, default=20)
     ap.add_argument("--round-budget-ms", type=int, default=60_000)
     ap.add_argument("--max-depth", type=int, default=50)
-    ap.add_argument("--no-bloom", action="store_true")
     ap.add_argument("--enrich", action="store_true", help="simhash/quality per fetched page")
     ap.add_argument("--cpus", type=int, default=None, help="local mode only")
     args = ap.parse_args()
@@ -57,7 +56,6 @@ def main() -> None:
         max_rounds=args.rounds,
         round_budget_ms=args.round_budget_ms,
         max_depth=args.max_depth,
-        bloom_enabled=not args.no_bloom,
         enrich_fetched=args.enrich,
     )
     summary = run_crawl(spark, args.corpus, args.checkpoint, cfg)

@@ -1,10 +1,9 @@
 """Partitioned Bloom filter: no false negatives (the exactness invariant),
-plausible FP rate, merge semantics, and bloom-on == bloom-off crawls."""
+plausible FP rate and merge semantics."""
 
 from __future__ import annotations
 
 import numpy as np
-import pytest
 
 from don_crawler_spark.functions.bloom import (
     empty_bits,
@@ -53,33 +52,3 @@ def test_empty_probe() -> None:
     some = np.array([1, 2, 3], dtype=np.int64)
     assert not might_contain(bits, some, M_BITS, K).any()
 
-
-@pytest.mark.slow
-def test_crawl_identical_with_and_without_bloom(spark, tmp_path) -> None:
-    """The Bloom prefilter is an optimization only: trace and seen-set are
-    bit-identical with it enabled or disabled."""
-    from don_crawler_spark.plans.checkpoint import CheckpointStore
-    from don_crawler_spark.plans.config import CrawlConfig
-    from don_crawler_spark.plans.driver import run_crawl
-    from don_crawler_spark.sources.synth import generate_corpus
-
-    corpus = str(tmp_path / "corpus")
-    generate_corpus(corpus, n_pages=150, n_hosts=8, seed=11, n_publishers=3)
-
-    results = {}
-    for label, enabled in [("on", True), ("off", False)]:
-        ckpt = str(tmp_path / f"ckpt_{label}")
-        cfg = CrawlConfig(max_rounds=4, bloom_enabled=enabled)
-        s = run_crawl(spark, corpus, ckpt, cfg)
-        store = CheckpointStore(ckpt)
-        trace = sorted(
-            (r["round"], r["seq_in_round"], r["host"], r["url"], r["status"])
-            for r in store.read_all(spark, "trace", s.rounds).collect()
-        )
-        seen = sorted(
-            (r["url_hash"], r["url"], r["first_round"])
-            for r in store.read_seen(spark, s.rounds).collect()
-        )
-        results[label] = (s.rounds, trace, seen)
-
-    assert results["on"] == results["off"]

@@ -48,6 +48,24 @@ def _engine_trace(spark, ckpt, upto):
     )
 
 
+def _assert_frontier_disjoint_from_seen(spark, ckpt, rounds) -> None:
+    """run_round's input invariant: for every committed round K,
+    frontier(K) ∩ read_seen(K) = ∅ (round 0's seed frontier meets an empty
+    seen set) -- the round's only seen check is the one that builds the
+    next frontier."""
+    from don_crawler_spark.plans.checkpoint import CheckpointStore
+
+    store = CheckpointStore(ckpt)
+    for rnd in range(rounds + 1):
+        frontier = store.read_table(spark, rnd, "frontier")
+        seen = store.read_seen(spark, rnd)
+        if seen is None:
+            assert rnd == 0
+            continue
+        hits = frontier.join(seen, "url_hash", "left_semi").count()
+        assert hits == 0, f"round {rnd}: {hits} frontier rows already seen"
+
+
 def test_oracle_sanity(oracle) -> None:
     assert oracle.rounds >= 3, "corpus should take several rounds"
     assert len(oracle.seen) > 100
@@ -113,6 +131,29 @@ def test_extracted_text_byte_exact(spark, engine_ckpt, oracle, corpus) -> None:
         assert got[url].encode("utf-8") == text.encode("utf-8"), url
 
 
+def test_committed_frontier_disjoint_from_seen(spark, engine_ckpt) -> None:
+    ckpt, summary = engine_ckpt
+    _assert_frontier_disjoint_from_seen(spark, ckpt, summary.rounds)
+
+
+def test_transient_corpus_frontier_disjoint_from_seen(
+    spark, tmp_path_factory
+) -> None:
+    """More retriable 503s: requeued attempts stay out of the seen set,
+    so the disjointness holds and the crawl still matches the oracle."""
+    from don_crawler_spark.plans.driver import run_crawl
+
+    corpus = str(tmp_path_factory.mktemp("corpus_transient"))
+    generate_corpus(corpus, n_pages=300, n_hosts=12, seed=42, n_publishers=4,
+                    transient_rate=0.05)
+    oracle = crawl_oracle(corpus, CFG)
+    ckpt = str(tmp_path_factory.mktemp("ckpt_transient"))
+    summary = run_crawl(spark, corpus, ckpt, CFG)
+    assert summary.rounds == oracle.rounds
+    _assert_frontier_disjoint_from_seen(spark, ckpt, summary.rounds)
+    assert _engine_trace(spark, ckpt, summary.rounds) == sorted(oracle.trace)
+
+
 def test_metrics_recorded(spark, engine_ckpt) -> None:
     from don_crawler_spark.plans.checkpoint import CheckpointStore
 
@@ -154,6 +195,7 @@ def test_resume_loses_at_most_one_round(
     seen = store.read_seen(spark, full.rounds)
     got_seen = {r["url"]: (r["url_hash"], r["first_round"]) for r in seen.collect()}
     assert got_seen == oracle.seen
+    _assert_frontier_disjoint_from_seen(spark, ckpt, full.rounds)
 
 
 # --- 301 redirect aliases -----------------------------------------------------
@@ -198,6 +240,7 @@ def test_redirect_corpus_parity(spark, redirect_corpus, tmp_path_factory) -> Non
     seen = store.read_seen(spark, summary.rounds)
     got_seen = {r["url"]: (r["url_hash"], r["first_round"]) for r in seen.collect()}
     assert got_seen == oracle.seen
+    _assert_frontier_disjoint_from_seen(spark, ckpt, summary.rounds)
 
 
 def test_redirect_rate_zero_leaves_corpus_identical(tmp_path_factory) -> None:

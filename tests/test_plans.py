@@ -69,7 +69,6 @@ def test_fetch_join_never_shuffles_pages(spark, tmp_path) -> None:
     """The round DAG's contract: the pages table appears below a
     broadcast-semi join (map-side prune), never below a shuffle exchange
     that carries html payloads."""
-    from don_crawler_spark.functions.bloom import BLOOM_SCHEMA
     from don_crawler_spark.plans.config import CrawlConfig
     from don_crawler_spark.plans.driver import _empty_seen
     from don_crawler_spark.plans.round import frontier_from_seeds, run_round
@@ -89,7 +88,6 @@ def test_fetch_join_never_shuffles_pages(spark, tmp_path) -> None:
         pages,
         robots,
         budgets,
-        bloom=spark.createDataFrame([], BLOOM_SCHEMA),
         persist=False,
     )
     plan = _optimized(out.fetched_full)
@@ -209,9 +207,17 @@ def test_enriched_round_plan_has_no_python_udf(spark, tmp_path) -> None:
     simhash pandas UDF sat on this path). The ONLY Python nodes allowed
     anywhere in the round plan are the URL-canonicalization slow-path
     fallbacks for rare complex shapes (functions/urls.py hybrid split) —
-    seeds feeding the frontier, and new-link resolution."""
+    seeds feeding the frontier, and new-link resolution.
+
+    The round checks the seen set once: no anti-join on the way to
+    ``fetched_full``, exactly one (the next frontier against the updated
+    seen set) in the ``new_frontier`` DAG, and no Python cogroup (Bloom
+    probe) in either. The optimizer pushes that one anti-join into each
+    branch of the frontier union, so it is counted in the analyzed plan.
+    The seen set is non-empty, so Catalyst cannot drop an anti-join
+    against it as a join with an empty relation."""
     from don_crawler_spark.plans.config import CrawlConfig
-    from don_crawler_spark.plans.driver import _empty_seen
+    from don_crawler_spark.plans.driver import SEEN_SCHEMA
     from don_crawler_spark.plans.round import frontier_from_seeds, run_round
     from don_crawler_spark.sources.synth import generate_corpus
 
@@ -221,7 +227,7 @@ def test_enriched_round_plan_has_no_python_udf(spark, tmp_path) -> None:
         CrawlConfig(enrich_fetched=True),
         1,
         frontier_from_seeds(spark.read.parquet(f"{corpus}/seeds.parquet")),
-        _empty_seen(spark),
+        spark.createDataFrame([(0, "https://elsewhere.example/", 0)], SEEN_SCHEMA),
         spark.read.parquet(f"{corpus}/pages.parquet"),
         spark.read.parquet(f"{corpus}/robots.parquet"),
         spark.read.parquet(f"{corpus}/host_budgets.parquet"),
@@ -233,6 +239,10 @@ def test_enriched_round_plan_has_no_python_udf(spark, tmp_path) -> None:
             if "EvalPython" in line:
                 assert "canonicalize" in line, f"non-canonicalization UDF: {line}"
         assert "simhash_udf" not in plan
+        assert "FlatMapCoGroupsInPandas" not in _optimized(df)
+    assert "LeftAnti" not in _optimized(out.fetched_full)
+    analyzed = out.new_frontier._jdf.queryExecution().analyzed().toString()
+    assert analyzed.count("LeftAnti") == 1
 
 
 def test_topk_uses_window_group_limit(spark) -> None:
