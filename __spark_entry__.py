@@ -3905,8 +3905,7 @@ def recrawl_rank_q(spark, sf_dir):
     """The recrawl pipeline end-to-end (operators/recrawl.py):
     revisit_schedule's half-life intervals + deterministic last-fetch
     days give each URL an overdue key at day 60; due URLs rank per host
-    through the salted two-phase budget top-k (cap 5/host) — the same
-    skew-safe shape as the crawl's politeness budget rank."""
+    through the salted two-phase budget top-k (cap 5/host)."""
     from don_crawler_spark.operators.recrawl import (
         recrawl_frontier_rank,
         revisit_schedule,

@@ -200,10 +200,9 @@ def source_cap(
     deterministic md5(doc_id) order so reruns — and the SQL oracle —
     pick identical survivors. No rand().
 
-    Two-phase salted top-k (the same shape as the crawl's budget rank,
-    plans/round.py): phase 1 ranks inside (source, salt) cells — a hot
-    source's rows sort in ``n_salts`` parallel cells, each pruned to
-    ``cap`` rows — and phase 2 ranks exactly over the <= cap*n_salts
+    Two-phase salted top-k: phase 1 ranks inside (source, salt) cells —
+    a hot source's rows sort in ``n_salts`` parallel cells, each pruned
+    to ``cap`` rows — and phase 2 ranks exactly over the <= cap*n_salts
     survivors per source. A source with 10^9 docs never sorts 10^9 rows
     in one task; the exact window sees at most cap*n_salts of them.
 

@@ -85,11 +85,10 @@ def recrawl_frontier_rank(
     Ties break on md5(url) then url, so reruns — and the SQL oracle —
     pick identical rows. No rand().
 
-    Two-phase salted top-k (the crawl's own budget-rank shape,
-    plans/round.py, and source_cap's): phase 1 ranks inside (host, salt)
-    cells, pruning a hot host's millions of due URLs to ``cap`` per cell
-    in ``n_salts`` parallel tasks; phase 2 ranks exactly over the
-    <= cap * n_salts survivors per host. No host ever sorts its full
+    Two-phase salted top-k (source_cap's shape): phase 1 ranks inside
+    (host, salt) cells, pruning a hot host's millions of due URLs to
+    ``cap`` per cell in ``n_salts`` parallel tasks; phase 2 ranks exactly
+    over the <= cap * n_salts survivors per host. No host ever sorts its full
     due-list in one task — the skew-safety the per-host window alone
     would not have.
     """

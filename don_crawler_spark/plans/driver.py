@@ -1,8 +1,8 @@
 """Multi-round crawl driver — the batch-iterative loop.
 
 The reference runs one continuous pipeline until its channels drain
-(crawler/crawler.go:642-669); the engine runs discrete rounds, each a
-single Spark job whose outputs are checkpointed before the next round
+(crawler/crawler.go:642-669); the engine runs discrete rounds, each one
+DataFrame DAG whose outputs are checkpointed before the next round
 plans (truncating lineage — iterative DataFrame graphs otherwise grow
 unboundedly). The driver touches only counters, never row data: per-round
 state flows parquet -> plan -> parquet on the executors.
@@ -32,13 +32,13 @@ def _choose_fetch_join(n_frontier: int, cfg: CrawlConfig) -> str:
     frontier ⊆ frontier rows); broadcast only under
     cfg.fetch_broadcast_limit.
 
-    The previous budgets-dimension bound (Σ host budgets) was UNSOUND —
-    frontier hosts absent from the dimension each get the default cap via
-    the coalesce in round.py, so with many uncovered hosts (the normal
-    case for newly discovered hosts at production scale) the bound read
-    small and the guard failed open onto a multi-GB broadcast (r3 ADVICE
-    high). The frontier count errs only toward "shuffle", which the
-    bloom-pruned shuffle path keeps O(selected), never toward an OOM.
+    A budgets-dimension bound (Σ host budgets) would be UNSOUND: frontier
+    hosts absent from the dimension each get the default cap via the
+    coalesce in round.py, so with many uncovered hosts (the normal case
+    for newly discovered hosts at production scale) the bound reads small
+    and the guard fails open onto a multi-GB broadcast. The frontier
+    count errs only toward "shuffle", which the bloom-pruned shuffle path
+    keeps O(selected), never toward an OOM.
     """
     if cfg.fetch_broadcast_limit is None:
         return "broadcast"
@@ -120,78 +120,12 @@ def run_crawl(
 
     n_frontier = store.row_count(start_round, "frontier")
 
-    # Smallest possible per-host budget a given round can produce
-    # (driver-side metadata, read once): when a round's WHOLE frontier
-    # is no larger than this floor, no host can exceed its budget and
-    # the salted pre-cut window in run_round cannot prune anything —
-    # the driver disables it for such rounds (same
-    # driver-side-metadata decision pattern as _choose_fetch_join).
-    # A host with a back-off timestamp reads budget 0 until its round
-    # start passes the stamp, so the floor is 0 for rounds that begin
-    # before the LATEST not_before_ts and the static minimum after.
-    def _static_min_budget_and_backoff():
-        import pyarrow.parquet as pq
-
-        path = f"{corpus_dir}/host_budgets.parquet"
-        default_b = cfg.host_budget(None, None)
-        try:
-            tbl = pq.read_table(path)
-        except OSError:
-            return default_b, None
-        cols = set(tbl.column_names)
-        latest_nb = None
-        if "not_before_ts" in cols:
-            nbs = [
-                v for v in tbl.column("not_before_ts").to_pylist()
-                if v is not None
-            ]
-            latest_nb = max(nbs) if nbs else None
-        delays = (
-            tbl.column("crawl_delay_ms").to_pylist()
-            if "crawl_delay_ms" in cols
-            else []
-        )
-        caps = (
-            tbl.column("max_per_round").to_pylist()
-            if "max_per_round" in cols
-            else [None] * len(delays)
-        )
-        budgets = [default_b] + [
-            cfg.host_budget(d, c) for d, c in zip(delays, caps)
-        ]
-        return min(budgets), latest_nb
-
-    static_min_budget, latest_not_before = _static_min_budget_and_backoff()
-
-    def _min_budget(rnd_: int) -> int:
-        if latest_not_before is not None and latest_not_before > cfg.round_ts(
-            rnd_
-        ):
-            return 0
-        return static_min_budget
-
-    def _max_host_rows(frontier_df: DataFrame) -> int:
-        """Largest per-host candidate count in the round's input
-        frontier — one tiny column-pruned aggregate (host only), its
-        1-row result collected like the metrics counters. Per-host
-        DEDUPED candidates are bounded by per-host raw frontier rows,
-        so ``max_host_rows <= min_budget`` proves no host can exceed
-        its budget this round and the pre-cut window cannot prune."""
-        row = (
-            frontier_df.groupBy("host")
-            .agg(F.count(F.lit(1)).alias("c"))
-            .agg(F.max("c").alias("m"))
-            .collect()
-        )
-        return int(row[0]["m"] or 0)
-
     for rnd in range(start_round + 1, cfg.max_rounds + 1):
         t0 = time.monotonic()
+        fetch_join = _choose_fetch_join(n_frontier, cfg)
         out = run_round(
             cfg, rnd, frontier, seen, pages, robots, budgets,
-            transient=transient, redirects=redirects,
-            fetch_join=_choose_fetch_join(n_frontier, cfg),
-            precut=_max_host_rows(frontier) > _min_budget(rnd),
+            transient=transient, redirects=redirects, fetch_join=fetch_join,
         )
 
         # Materialize in dependency order; manifest commit is the txn point.
@@ -265,6 +199,8 @@ def run_crawl(
                 "selected": n_selected,
                 "fetched_200": n_200,
                 "wall_ms": wall_ms,
+                "fetch_join": fetch_join,
+                "n_frontier": n_frontier,
             },
         )
         summary.rounds = rnd

@@ -18,14 +18,13 @@ Scale notes (the judge-facing design decisions):
   pages fetch-join both shuffle on it, so at warehouse scale both tables
   are bucketed by ``url_hash`` and the joins are co-located (no shuffle of
   the big side). Sandbox runs use plain parquet + AQE.
-* The per-host budget window partitions by ``host`` — inherently skewed
-  (a heavy domain dominates). The window input is the *frontier candidate
-  set*, already pruned by dedup/robots; rank only needs the smallest
-  ``budget`` rows per host, so we pre-cut each host's candidates with a
-  cheap salted partial top-k before the exact window (two-phase top-k:
-  per (host, salt) local rank prunes to budget rows, then the exact
-  per-host rank runs on ≤ salt_factor x budget rows per host instead of
-  the host's whole frontier).
+* The per-host budget window partitions by ``host`` alone, so a hot
+  host's candidates rank in one task. Its input is the frontier
+  candidate set, already pruned by dedup/robots. There is no salted
+  pre-cut (a per-(host, salt) partial top-k ahead of the exact window):
+  it measured as pure cost on both benchmark workloads, including the
+  budget-bound one with a heavy host. Bring it back only with a hot-host
+  workload that shows it paying.
 * ``seq_in_round`` is arithmetic, not a global sort: per-(level, host-salt)
   cell counts + a θ-join cumulative offset + a per-cell partitioned rank
   (see the inline note). No unpartitioned window touches the selected set
@@ -58,9 +57,6 @@ from don_crawler_spark.functions.urls import (
 from don_crawler_spark.plans.config import CrawlConfig
 
 FRONTIER_COLS = ["url_hash", "url", "host", "path", "depth", "src_url", "attempts"]
-
-# pre-cut salt factor for the budget window (see module docstring)
-_BUDGET_PRECUT_SALTS = 8
 
 # sub-partitioning of the within-level sequence rank: level 1 holds one
 # row per host, so a window partitioned by level alone would sort every
@@ -181,10 +177,9 @@ def run_round(
     transient: DataFrame | None = None,
     fetch_join: str = "broadcast",
     redirects: DataFrame | None = None,
-    precut: bool = True,
 ) -> RoundOutput:
-    """Build the round-``rnd`` DAG. Nothing is executed here — the driver
-    materializes the outputs (checkpoint) which triggers one job.
+    """Build the round-``rnd`` DAG. Nothing is executed here: the driver
+    runs the round's jobs when it writes the outputs to the checkpoint.
 
     The round checks the seen set once, at its end: the next frontier is
     anti-joined against ``seen`` plus this round's seen delta, which is
@@ -223,42 +218,16 @@ def run_round(
         ),
     )
 
-    # two-phase top-k: salted local rank prunes each host's candidates to
-    # ≤ _BUDGET_PRECUT_SALTS x budget rows before the exact per-host window.
-    # ``precut=False`` skips the salted pass entirely — the driver
-    # disables it for rounds in which no host's frontier rows can exceed
-    # its budget (the largest per-host frontier row count, from one small
-    # aggregate job per round in driver._max_host_rows, <= the smallest
-    # budget the round can produce): in that regime the pre-rank can
-    # prune nothing, so the extra window is pure cost. The
-    # selected/deferred row sets are identical either way (the exact
-    # per-host window re-applies the same budget cut).
-    if precut:
-        salt = F.pmod(F.col("url_hash"), F.lit(_BUDGET_PRECUT_SALTS))
-        w_pre = Window.partitionBy("host", salt).orderBy("depth", "url_hash")
-        pre = allowed.withColumn("__pre_rank", F.row_number().over(w_pre))
-        survivors = pre.filter(F.col("__pre_rank") <= F.col("budget")).drop(
-            "__pre_rank"
-        )
-        deferred_precut = pre.filter(
-            F.col("__pre_rank") > F.col("budget")
-        ).drop("__pre_rank")
-    else:
-        survivors = allowed
-        deferred_precut = allowed.limit(0)
-
     w_host = Window.partitionBy("host").orderBy("depth", "url_hash")
-    ranked = survivors.withColumn("rank_in_host", F.row_number().over(w_host))
+    ranked = allowed.withColumn("rank_in_host", F.row_number().over(w_host))
     selected = ranked.filter(F.col("rank_in_host") <= F.col("budget"))
     if persist:
         # the sequence arithmetic below branches off `selected` twice
-        # (level counts + the rows themselves); cache so the two budget
-        # windows don't run once per branch
+        # (level counts + the rows themselves); cache so the budget
+        # window doesn't run once per branch
         selected = selected.persist()
-    deferred = (
-        ranked.filter(F.col("rank_in_host") > F.col("budget"))
-        .drop("rank_in_host")
-        .unionByName(deferred_precut)
+    deferred = ranked.filter(F.col("rank_in_host") > F.col("budget")).drop(
+        "rank_in_host"
     )
 
     # canonical global order within the round: (rank_in_host, host_salt,
@@ -340,15 +309,14 @@ def run_round(
         "lang",
     )
     if fetch_join == "shuffle":
-        # MID-REGIME FIX (r3 VERDICT #3): the degraded path used to run
-        # extraction over EVERY page in the scan — O(corpus) per round
-        # when 1M < selected << corpus. Instead, prune the scan with a
-        # Catalyst Bloom filter over the selected url_hash keys
-        # (functions/native_bloom.py: bloom_filter_agg is a distributed
-        # aggregate with map-side partial merge — the driver never sees
-        # the keys — and might_contain evaluates map-side at the scan).
-        # False positives only extract a few extra rows — the final join
-        # is exact on (url_hash, url) — so extraction is
+        # MID-REGIME: extracting over EVERY page in the scan would cost
+        # O(corpus) per round when 1M < selected << corpus. So prune the
+        # scan with a Catalyst Bloom filter over the selected url_hash
+        # keys (functions/native_bloom.py: bloom_filter_agg is a
+        # distributed aggregate with map-side partial merge — the driver
+        # never sees the keys — and might_contain evaluates map-side at
+        # the scan). False positives only extract a few extra rows — the
+        # final join is exact on (url_hash, url) — so extraction is
         # O(selected + fpp*corpus). html still never crosses an
         # exchange. If the native expressions are unavailable the plan
         # falls back to the un-pruned scan: degraded cost, same rows.

@@ -66,6 +66,82 @@ def _assert_frontier_disjoint_from_seen(spark, ckpt, rounds) -> None:
         assert hits == 0, f"round {rnd}: {hits} frontier rows already seen"
 
 
+def _assert_budget_cut_invariants(spark, corpus, ckpt, rounds) -> int:
+    """The budget cut's invariants on every committed round K; returns the
+    number of deferred rows over all rounds.
+
+    * budget bound: per host, rows in fetched(K) <= CrawlConfig.host_budget
+      for that host in round K (hosts missing from the budgets table get
+      the default quota).
+    * conservation: every distinct url_hash of frontier(K-1) is exactly
+      one of: denied by robots; fetched in round K; carried into
+      frontier(K) unchanged as a deferred row. A fetched URL leaves the
+      frontier, except a retriable 503, which is in fetched(K) AND
+      requeues in frontier(K) with attempts + 1."""
+    from collections import Counter
+
+    import pyarrow.parquet as pq
+
+    from don_crawler_spark.functions.robots import apply_robots_filter
+    from don_crawler_spark.plans.checkpoint import CheckpointStore
+    from don_crawler_spark.plans.round import FRONTIER_COLS, _dedup_frontier
+
+    store = CheckpointStore(ckpt)
+    robots = spark.read.parquet(f"{corpus}/robots.parquet")
+    budgets = {
+        b["host"]: b
+        for b in pq.read_table(f"{corpus}/host_budgets.parquet").to_pylist()
+    }
+    n_deferred = 0
+    for rnd in range(1, rounds + 1):
+        cand_df = _dedup_frontier(store.read_table(spark, rnd - 1, "frontier"))
+        cand = {
+            r["url_hash"]: tuple(r)
+            for r in cand_df.select(FRONTIER_COLS).collect()
+        }
+        denied = {
+            r["url_hash"]
+            for r in apply_robots_filter(cand_df, robots)[1].collect()
+        }
+        fetched = (
+            store.read_table(spark, rnd, "fetched_full")
+            .select("url_hash", "host", "__seen_eligible")
+            .collect()
+        )
+        nxt = {
+            tuple(r)
+            for r in store.read_table(spark, rnd, "frontier")
+            .select(FRONTIER_COLS)
+            .collect()
+        }
+
+        for host, n in Counter(r["host"] for r in fetched).items():
+            b = budgets.get(host, {})
+            budget = CFG.host_budget(
+                b.get("crawl_delay_ms"), b.get("max_per_round"),
+                b.get("not_before_ts"), rnd,
+            )
+            assert n <= budget, f"round {rnd}: {host} fetched {n} > {budget}"
+
+        fetched_hashes = {r["url_hash"] for r in fetched}
+        assert len(fetched_hashes) == len(fetched), f"round {rnd}: refetch"
+        deferred = {h for h, row in cand.items() if row in nxt}
+        for h in cand:
+            homes = (h in denied) + (h in fetched_hashes) + (h in deferred)
+            assert homes == 1, f"round {rnd}: url_hash {h} in {homes} sets"
+        assert fetched_hashes <= cand.keys(), f"round {rnd}: fetched non-candidate"
+        nxt_hashes = {row[0] for row in nxt}
+        for r in fetched:
+            h = r["url_hash"]
+            if r["__seen_eligible"]:
+                assert h not in nxt_hashes, f"round {rnd}: {h} fetched and requeued"
+            else:
+                retry = cand[h][:-1] + (cand[h][-1] + 1,)
+                assert retry in nxt, f"round {rnd}: retriable 503 {h} not requeued"
+        n_deferred += len(deferred)
+    return n_deferred
+
+
 def test_oracle_sanity(oracle) -> None:
     assert oracle.rounds >= 3, "corpus should take several rounds"
     assert len(oracle.seen) > 100
@@ -136,22 +212,37 @@ def test_committed_frontier_disjoint_from_seen(spark, engine_ckpt) -> None:
     _assert_frontier_disjoint_from_seen(spark, ckpt, summary.rounds)
 
 
-def test_transient_corpus_frontier_disjoint_from_seen(
-    spark, tmp_path_factory
-) -> None:
-    """More retriable 503s: requeued attempts stay out of the seen set,
-    so the disjointness holds and the crawl still matches the oracle."""
+def test_budget_cut_invariants(spark, corpus, engine_ckpt) -> None:
+    ckpt, summary = engine_ckpt
+    n_deferred = _assert_budget_cut_invariants(spark, corpus, ckpt, summary.rounds)
+    assert n_deferred > 0, "the budget should defer something"
+
+
+@pytest.fixture(scope="module")
+def transient_run(spark, tmp_path_factory):
+    """A crawl of a corpus with more retriable 503s."""
     from don_crawler_spark.plans.driver import run_crawl
 
     corpus = str(tmp_path_factory.mktemp("corpus_transient"))
     generate_corpus(corpus, n_pages=300, n_hosts=12, seed=42, n_publishers=4,
                     transient_rate=0.05)
-    oracle = crawl_oracle(corpus, CFG)
     ckpt = str(tmp_path_factory.mktemp("ckpt_transient"))
-    summary = run_crawl(spark, corpus, ckpt, CFG)
+    return corpus, ckpt, run_crawl(spark, corpus, ckpt, CFG)
+
+
+def test_transient_corpus_frontier_disjoint_from_seen(spark, transient_run) -> None:
+    """Requeued attempts stay out of the seen set, so the disjointness
+    holds and the crawl still matches the oracle."""
+    corpus, ckpt, summary = transient_run
+    oracle = crawl_oracle(corpus, CFG)
     assert summary.rounds == oracle.rounds
     _assert_frontier_disjoint_from_seen(spark, ckpt, summary.rounds)
     assert _engine_trace(spark, ckpt, summary.rounds) == sorted(oracle.trace)
+
+
+def test_transient_corpus_budget_cut_invariants(spark, transient_run) -> None:
+    corpus, ckpt, summary = transient_run
+    _assert_budget_cut_invariants(spark, corpus, ckpt, summary.rounds)
 
 
 def test_metrics_recorded(spark, engine_ckpt) -> None:
@@ -165,6 +256,11 @@ def test_metrics_recorded(spark, engine_ckpt) -> None:
     assert all(r["wall_ms"] >= 0 for r in rows)
     total = sum(r["urls_fetched"] for r in rows)
     assert total == summary.urls_fetched
+    # the driver's decisions per round, from driver-side metadata
+    for rnd in range(1, summary.rounds + 1):
+        counters = store.read_manifest(rnd)["counters"]
+        assert counters["fetch_join"] == "broadcast"
+        assert counters["n_frontier"] == store.row_count(rnd - 1, "frontier")
 
 
 def test_resume_loses_at_most_one_round(

@@ -215,7 +215,13 @@ def test_enriched_round_plan_has_no_python_udf(spark, tmp_path) -> None:
     probe) in either. The optimizer pushes that one anti-join into each
     branch of the frontier union, so it is counted in the analyzed plan.
     The seen set is non-empty, so Catalyst cannot drop an anti-join
-    against it as a join with an empty relation."""
+    against it as a join with an empty relation.
+
+    The budget cut is one window per host: every ``row_number()`` window
+    led by ``host`` in the analyzed ``fetched_full`` plan partitions by
+    ``host`` alone (no salted pre-rank partitioned by ``host, salt``)."""
+    import re
+
     from don_crawler_spark.plans.config import CrawlConfig
     from don_crawler_spark.plans.driver import SEEN_SCHEMA
     from don_crawler_spark.plans.round import frontier_from_seeds, run_round
@@ -243,6 +249,16 @@ def test_enriched_round_plan_has_no_python_udf(spark, tmp_path) -> None:
     assert "LeftAnti" not in _optimized(out.fetched_full)
     analyzed = out.new_frontier._jdf.queryExecution().analyzed().toString()
     assert analyzed.count("LeftAnti") == 1
+    host_windows = [
+        re.sub(r"#\d+L?", "", spec).split(", ")
+        for spec in re.findall(
+            r"Window \[row_number\(\) .*? AS \w+#\d+\], \[([^\]]*)\]",
+            out.fetched_full._jdf.queryExecution().analyzed().toString(),
+        )
+    ]
+    host_windows = [spec for spec in host_windows if spec[0] == "host"]
+    assert host_windows, "no per-host budget window in the plan"
+    assert all(spec == ["host"] for spec in host_windows), host_windows
 
 
 def test_topk_uses_window_group_limit(spark) -> None:
