@@ -55,8 +55,8 @@ class CrawlConfig:
     # session's 64 MB broadcast envelope). Above it — production-scale
     # budgets over a 10^7+-row frontier, where the broadcast would be
     # multi-GB — the round degrades to a shuffle-hash join on url_hash
-    # (plans/round.py, fetch_join="shuffle"). None = always broadcast.
-    fetch_broadcast_limit: int | None = 1_000_000
+    # (plans/round.py, fetch_join="shuffle").
+    fetch_broadcast_limit: int = 1_000_000
     # shuffle-mode scan prune (plans/round.py + functions/native_bloom):
     # sizing of the Catalyst Bloom built over the selected keys. Defaults
     # sit at Spark's runtime-bloom conf caps (4M items / 64M bits = 8 MB,

@@ -40,8 +40,6 @@ def _choose_fetch_join(n_frontier: int, cfg: CrawlConfig) -> str:
     count errs only toward "shuffle", which the bloom-pruned shuffle path
     keeps O(selected), never toward an OOM.
     """
-    if cfg.fetch_broadcast_limit is None:
-        return "broadcast"
     return "broadcast" if n_frontier <= cfg.fetch_broadcast_limit else "shuffle"
 
 
@@ -130,10 +128,10 @@ def run_crawl(
 
         # Materialize in dependency order; manifest commit is the txn point.
         # The fetched_full write runs FIRST and alone: it populates the
-        # round's persisted frames (selected / enriched), which every
-        # other output reads. The remaining two outputs — frontier
-        # write, metrics aggregate — only consume those caches and are
-        # mutually independent, so they run as CONCURRENT jobs from a
+        # round's persisted frames (ranked / selected / enriched), which
+        # every other output reads. The remaining two outputs — frontier
+        # write, metrics aggregate + write — only consume those caches and
+        # are mutually independent, so they run as CONCURRENT jobs from a
         # small thread pool (guide §2.6: actions are only sequential
         # because the driver calls them sequentially); the next job's
         # tasks back-fill executors freed by the previous job's straggler
@@ -145,13 +143,12 @@ def run_crawl(
         def _write_frontier() -> None:
             store.write_table(out.new_frontier, rnd, "frontier")
 
-        def _metrics() -> list:
-            # per-partition lineage/counters (metrics table): ONE
-            # aggregation job over the persisted round output (no
-            # parquet re-read), its tiny result collected once and
-            # re-written as the metrics table from the driver (a
-            # sub-second 1-partition write)
-            return (
+        def _write_metrics() -> None:
+            # per-partition lineage/counters (metrics table): ONE job
+            # aggregates the persisted round output (no parquet re-read)
+            # and writes the result as one file. Written even when empty:
+            # tooling reads metrics for the terminal round too.
+            agg = (
                 out.fetched_full
                 .groupBy(F.spark_partition_id().alias("partition_id"))
                 .agg(
@@ -163,30 +160,24 @@ def run_crawl(
                 )
                 .withColumn("round", F.lit(rnd))
                 .withColumn(
-                    "wall_ms", F.lit(int((time.monotonic() - t0) * 1000))
+                    "wall_ms",
+                    F.lit(int((time.monotonic() - t0) * 1000)).cast("long"),
                 )
-            ).collect()
+            )
+            store.write_table(agg.coalesce(1), rnd, "metrics")
 
         from concurrent.futures import ThreadPoolExecutor
 
         with ThreadPoolExecutor(max_workers=2) as pool:
-            f_frontier = pool.submit(_write_frontier)
-            f_metrics = pool.submit(_metrics)
-            f_frontier.result()
-            mrows = f_metrics.result()
-        # write even when empty: tooling reads metrics for the terminal
-        # round too (an empty round still leaves an empty metrics table)
-        store.write_table(
-            spark.createDataFrame(
-                mrows,
-                "partition_id int, urls_fetched bigint, urls_200 bigint, "
-                "links_emitted bigint, round int, wall_ms bigint",
-            ),
-            rnd,
-            "metrics",
-        )
-        n_selected = sum(r["urls_fetched"] for r in mrows)
-        n_200 = sum(r["urls_200"] for r in mrows)
+            for f in [pool.submit(_write_frontier), pool.submit(_write_metrics)]:
+                f.result()
+        # the round's counters, read back from the metrics file on the
+        # driver (a few rows, no Spark job)
+        counts = ds.dataset(
+            store.table_path(rnd, "metrics"), format="parquet"
+        ).to_table(columns=["urls_fetched", "urls_200"])
+        n_selected = sum(counts["urls_fetched"].to_pylist())
+        n_200 = sum(counts["urls_200"].to_pylist())
         if n_selected == 0:
             # empty round: don't commit, don't continue (oracle breaks
             # before emitting anything for an empty selection)

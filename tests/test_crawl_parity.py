@@ -246,19 +246,36 @@ def test_transient_corpus_budget_cut_invariants(spark, transient_run) -> None:
 
 
 def test_metrics_recorded(spark, engine_ckpt) -> None:
+    import os
+
     from don_crawler_spark.plans.checkpoint import CheckpointStore
 
     ckpt, summary = engine_ckpt
     store = CheckpointStore(ckpt)
     m = store.read_all(spark, "metrics", summary.rounds)
+    assert [(f.name, f.dataType.simpleString()) for f in m.schema] == [
+        ("partition_id", "int"),
+        ("urls_fetched", "bigint"),
+        ("urls_200", "bigint"),
+        ("links_emitted", "bigint"),
+        ("round", "int"),
+        ("wall_ms", "bigint"),
+    ]
     rows = m.collect()
     assert {r["round"] for r in rows} == set(range(1, summary.rounds + 1))
     assert all(r["wall_ms"] >= 0 for r in rows)
     total = sum(r["urls_fetched"] for r in rows)
     assert total == summary.urls_fetched
-    # the driver's decisions per round, from driver-side metadata
     for rnd in range(1, summary.rounds + 1):
         counters = store.read_manifest(rnd)["counters"]
+        # the manifest's counters are the sums of the round's metrics
+        in_round = [r for r in rows if r["round"] == rnd]
+        assert sum(r["urls_fetched"] for r in in_round) == counters["selected"]
+        assert sum(r["urls_200"] for r in in_round) == counters["fetched_200"]
+        # one data file per round's metrics table
+        files = os.listdir(store.table_path(rnd, "metrics"))
+        assert len([f for f in files if f.endswith(".parquet")]) == 1, files
+        # the driver's decisions per round, from driver-side metadata
         assert counters["fetch_join"] == "broadcast"
         assert counters["n_frontier"] == store.row_count(rnd - 1, "frontier")
 

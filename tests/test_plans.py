@@ -137,8 +137,6 @@ def test_fetch_join_degrades_to_shuffle_hash_over_threshold(spark, tmp_path) -> 
     )
     assert _choose_fetch_join(n_frontier, lean) == "broadcast"
     assert _choose_fetch_join(n_frontier, saturated) == "shuffle"
-    assert _choose_fetch_join(10**9, dataclasses.replace(
-        lean, fetch_broadcast_limit=None)) == "broadcast"
 
     out = run_round(
         saturated, 1, frontier, _empty_seen(spark), pages, robots, budgets,
@@ -201,6 +199,27 @@ def test_no_python_udf_in_native_queries(spark) -> None:
         assert "EvalPython" not in plan, name
 
 
+def _round_on_fixture(spark, tmp_path, cfg, persist: bool):
+    """Round 1 over the 150-page / 6-host corpus, against a one-row seen
+    set (an empty one would let Catalyst drop the anti-join)."""
+    from don_crawler_spark.plans.driver import SEEN_SCHEMA
+    from don_crawler_spark.plans.round import frontier_from_seeds, run_round
+    from don_crawler_spark.sources.synth import generate_corpus
+
+    corpus = str(tmp_path / "c")
+    generate_corpus(corpus, n_pages=150, n_hosts=6, seed=21, n_publishers=3)
+    return run_round(
+        cfg,
+        1,
+        frontier_from_seeds(spark.read.parquet(f"{corpus}/seeds.parquet")),
+        spark.createDataFrame([(0, "https://elsewhere.example/", 0)], SEEN_SCHEMA),
+        spark.read.parquet(f"{corpus}/pages.parquet"),
+        spark.read.parquet(f"{corpus}/robots.parquet"),
+        spark.read.parquet(f"{corpus}/host_budgets.parquet"),
+        persist=persist,
+    )
+
+
 def test_enriched_round_plan_has_no_python_udf(spark, tmp_path) -> None:
     """With enrich_fetched=True the page-processing DAG (extract + links
     + simhash_v2 + quality stats) must be JVM-native (r2 finding: the v1
@@ -210,12 +229,12 @@ def test_enriched_round_plan_has_no_python_udf(spark, tmp_path) -> None:
     seeds feeding the frontier, and new-link resolution.
 
     The round checks the seen set once: no anti-join on the way to
-    ``fetched_full``, exactly one (the next frontier against the updated
+    ``fetched_full``, exactly one (the new links against the updated
     seen set) in the ``new_frontier`` DAG, and no Python cogroup (Bloom
-    probe) in either. The optimizer pushes that one anti-join into each
-    branch of the frontier union, so it is counted in the analyzed plan.
-    The seen set is non-empty, so Catalyst cannot drop an anti-join
-    against it as a join with an empty relation.
+    probe) in either. The optimizer copies that one anti-join into each
+    canonicalization branch of the new links, so it is counted in the
+    analyzed plan. The seen set is non-empty, so Catalyst cannot drop an
+    anti-join against it as a join with an empty relation.
 
     The budget cut is one window per host: every ``row_number()`` window
     led by ``host`` in the analyzed ``fetched_full`` plan partitions by
@@ -223,21 +242,9 @@ def test_enriched_round_plan_has_no_python_udf(spark, tmp_path) -> None:
     import re
 
     from don_crawler_spark.plans.config import CrawlConfig
-    from don_crawler_spark.plans.driver import SEEN_SCHEMA
-    from don_crawler_spark.plans.round import frontier_from_seeds, run_round
-    from don_crawler_spark.sources.synth import generate_corpus
 
-    corpus = str(tmp_path / "c")
-    generate_corpus(corpus, n_pages=150, n_hosts=6, seed=21, n_publishers=3)
-    out = run_round(
-        CrawlConfig(enrich_fetched=True),
-        1,
-        frontier_from_seeds(spark.read.parquet(f"{corpus}/seeds.parquet")),
-        spark.createDataFrame([(0, "https://elsewhere.example/", 0)], SEEN_SCHEMA),
-        spark.read.parquet(f"{corpus}/pages.parquet"),
-        spark.read.parquet(f"{corpus}/robots.parquet"),
-        spark.read.parquet(f"{corpus}/host_budgets.parquet"),
-        persist=False,
+    out = _round_on_fixture(
+        spark, tmp_path, CrawlConfig(enrich_fetched=True), persist=False
     )
     for df in (out.fetched_full, out.new_frontier):
         plan = _plan(df)
@@ -259,6 +266,43 @@ def test_enriched_round_plan_has_no_python_udf(spark, tmp_path) -> None:
     host_windows = [spec for spec in host_windows if spec[0] == "host"]
     assert host_windows, "no per-host budget window in the plan"
     assert all(spec == ["host"] for spec in host_windows), host_windows
+
+
+def test_round_materializes_three_caches(spark, tmp_path) -> None:
+    """Each round intermediate is computed once: writing both outputs
+    fills exactly three caches -- the budget-window output ``ranked``,
+    the sequenced ``selected`` and ``enriched`` (no separate cache for
+    the deferred rows or the pre-sequence selected set). Counted as new
+    persistent RDD ids: RDDs persisted by earlier tests may be released
+    by the context cleaner meanwhile, so a size diff is unreliable."""
+    from don_crawler_spark.plans.config import CrawlConfig
+
+    spark.catalog.clearCache()
+    before = set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+    out = _round_on_fixture(spark, tmp_path, CrawlConfig(), persist=True)
+    out.fetched_full.write.parquet(str(tmp_path / "fetched_full"))
+    out.new_frontier.write.parquet(str(tmp_path / "frontier"))
+    after = set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+    spark.catalog.clearCache()
+    assert len(after - before) == 3
+
+
+def test_seen_check_runs_on_new_links_only(spark, tmp_path) -> None:
+    """The next frontier is coalesce(deferred ∪ new links ∪ retries), and
+    only the new-links branch is anti-joined against the seen set:
+    deferred and retry rows cannot be seen (run_round's INVARIANT)."""
+    from don_crawler_spark.plans.config import CrawlConfig
+
+    out = _round_on_fixture(spark, tmp_path, CrawlConfig(), persist=False)
+    analyzed = out.new_frontier._jdf.queryExecution().analyzed()
+    assert analyzed.nodeName() == "Repartition"  # the coalesce
+    union = analyzed.children().apply(0)
+    assert union.nodeName() == "Union"
+    branches = [
+        union.children().apply(i).toString()
+        for i in range(union.children().size())
+    ]
+    assert ["LeftAnti" in b for b in branches] == [False, True, False]
 
 
 def test_topk_uses_window_group_limit(spark) -> None:
