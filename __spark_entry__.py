@@ -1065,7 +1065,7 @@ def dedup_ngram(spark, sf_dir):
         n=3,
         threshold=0.2,
         max_shingle_df=50,
-        # measured (BENCH/regress_probe.py --persist, interleaved medians):
+        # measured (interleaved medians):
         # persisting the exploded shingle relation beats recomputing the
         # scan+explode per consumer shuffle at this scale, 8.3s -> 6.2s
         persist_shingles=True,
@@ -1306,7 +1306,7 @@ def dedup_embedding(spark, sf_dir):
     (the expression-only baseline lives in operators/similarity.py).
     respread=False: the plan's first heavy op is the cogroup's own
     shuffle on the block-pair key, so a load-time repartition is a
-    wasted exchange (measured 1.7x, BENCH/regress_probe.py)."""
+    wasted exchange (measured 1.7x slower with it)."""
     return SIM.embedding_near_dup_pairs_gemm(
         load(spark, sf_dir, "embeddings", respread=False), threshold=0.5
     )

@@ -202,8 +202,8 @@ def force(df) -> None:
 def probe_mbs() -> float:
     """Host write-throttle probe (memory-bandwidth fill): the single
     calibration the clean-pair protocol compares across runs — keep ONE
-    implementation (BENCH/regress_probe.py imports this one) so probe
-    readings stay comparable across scripts and sessions."""
+    implementation so probe readings stay comparable across scripts and
+    sessions."""
     import numpy as np
 
     a = np.empty(100 * 1024 * 1024, dtype=np.int8)

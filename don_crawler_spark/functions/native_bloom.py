@@ -5,11 +5,11 @@ Spark's own runtime-filter rule (InjectRuntimeFilter) does exactly this —
 it builds a ``BloomFilterAggregate`` over the creation side and prunes the
 probe side's scan with ``BloomFilterMightContain`` — but neither function
 is exposed in the public registry, and the injection rule only fires on
-equi-joins under size thresholds Catalyst controls. The crawl's
-shuffle-mode fetch join needs the same prune deterministically (r3
-VERDICT #3: without it, X1 extraction ran over the WHOLE corpus whenever
-the selected set exceeded the broadcast limit), so this module wires the
-same two Catalyst expressions up directly:
+equi-joins under size thresholds Catalyst controls. The crawl's fetch
+join (plans/round.py) needs the same prune deterministically: without
+it, extraction runs over the WHOLE pages corpus every round, not over the
+selected set. So this module wires the same two Catalyst expressions up
+directly:
 
   * ``bloom_filter_agg`` is copied from ``FunctionRegistry.internal`` into
     the session registry (once per session) — a distributed aggregate
@@ -36,8 +36,8 @@ def _ensure_bloom_agg_registered(spark) -> bool:
 
     Deliberately NOT memoized per session: an ``id(spark)``-keyed cache
     can collide when a stopped session's address is reused by a new one,
-    silently skipping registration and degrading every shuffle round to
-    the un-pruned extraction scan. registerFunction overwrites, so
+    silently skipping registration and degrading every round to the
+    un-pruned extraction scan. registerFunction overwrites, so
     re-running the few py4j calls per round is both safe and cheap next
     to the round's jobs."""
     try:

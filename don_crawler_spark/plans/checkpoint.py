@@ -93,12 +93,11 @@ class CheckpointStore:
     def row_count(self, rnd: int, name: str) -> int:
         """Exact row count of a checkpointed table from parquet FOOTERS —
         a driver-side metadata read (one small footer per file), no Spark
-        job. The driver uses this for the fetch-join guard: the frontier's
-        exact size is a sound upper bound on the round's selected set
+        job. The driver sizes each round's fetch-join Bloom prune with the
+        frontier's count: it soundly bounds the round's selected set
         (selected ⊆ deduped frontier), unlike the budgets-dimension sum,
-        which fails open when frontier hosts are absent from the dimension
-        (each uncovered host silently gets the default cap — the r3 ADVICE
-        finding)."""
+        which reads small when frontier hosts are absent from the
+        dimension (each uncovered host silently gets the default cap)."""
         import pyarrow.parquet as pq
 
         path = self.table_path(rnd, name)
@@ -109,31 +108,13 @@ class CheckpointStore:
         return total
 
     def read_table(self, spark: SparkSession, rnd: int, name: str) -> DataFrame:
-        # fetched_full is canonical for the virtual names — a same-named
-        # directory left by a crashed pre-consolidation run (or a partial
-        # write) must never shadow it
-        if name in self._VIRTUAL and os.path.exists(
-            self.table_path(rnd, "fetched_full")
-        ):
-            full = spark.read.parquet(self.table_path(rnd, "fetched_full"))
-            cols = self._VIRTUAL[name]
-            if cols is None:
-                cols = [c for c in full.columns if c not in self._FETCHED_INTERNAL]
-            if name == "seen_delta" and self._SEEN_FILTER_COL in full.columns:
-                full = full.filter(self._SEEN_FILTER_COL)
-            return full.select(*cols)
         return spark.read.parquet(self.table_path(rnd, name))
 
     def _round_paths(self, name: str, upto_round: int) -> list[str]:
-        out = []
-        for r in range(1, upto_round + 1):
-            full = self.table_path(r, "fetched_full")
-            p = self.table_path(r, name)
-            if name in self._VIRTUAL and os.path.exists(full):
-                out.append(full)  # canonical; never shadowed (see read_table)
-            elif os.path.exists(p):
-                out.append(p)
-        return out
+        if name in self._VIRTUAL:
+            name = "fetched_full"
+        paths = [self.table_path(r, name) for r in range(1, upto_round + 1)]
+        return [p for p in paths if os.path.exists(p)]
 
     def read_seen(self, spark: SparkSession, upto_round: int) -> DataFrame | None:
         """The seen-set is the union of per-round deltas (append-only —
@@ -141,17 +122,18 @@ class CheckpointStore:
         paths = self._round_paths("fetched_full", upto_round)
         if not paths:
             return None
-        df = spark.read.parquet(*paths)
-        if self._SEEN_FILTER_COL in df.columns:
-            df = df.filter(self._SEEN_FILTER_COL)
-        return df.select("url_hash", "url", "first_round")
+        return (
+            spark.read.parquet(*paths)
+            .filter(self._SEEN_FILTER_COL)
+            .select("url_hash", "url", "first_round")
+        )
 
     def read_all(self, spark: SparkSession, name: str, upto_round: int) -> DataFrame | None:
         paths = self._round_paths(name, upto_round)
         if not paths:
             return None
         df = spark.read.parquet(*paths)
-        if name == "seen_delta" and self._SEEN_FILTER_COL in df.columns:
+        if name == "seen_delta":
             df = df.filter(self._SEEN_FILTER_COL)
         cols = self._VIRTUAL.get(name)
         if cols is None and name in self._VIRTUAL:

@@ -49,22 +49,6 @@ class CrawlConfig:
     # crawl pipeline produces; off by default (parity suites pin the
     # lean schema), on in the throughput bench
     enrich_fetched: bool = False
-    # fetch-join strategy guard: the round's selected set is broadcast
-    # (as a semi-join prune of the pages corpus) only while its size
-    # bound stays under this row count (~60 B/row -> 1M rows ≈ the
-    # session's 64 MB broadcast envelope). Above it — production-scale
-    # budgets over a 10^7+-row frontier, where the broadcast would be
-    # multi-GB — the round degrades to a shuffle-hash join on url_hash
-    # (plans/round.py, fetch_join="shuffle").
-    fetch_broadcast_limit: int = 1_000_000
-    # shuffle-mode scan prune (plans/round.py + functions/native_bloom):
-    # sizing of the Catalyst Bloom built over the selected keys. Defaults
-    # sit at Spark's runtime-bloom conf caps (4M items / 64M bits = 8 MB,
-    # fpp ~5e-4); for 10^7-10^8-row selected sets raise these together
-    # with spark.sql.optimizer.runtime.bloomFilter.{maxNumItems,maxNumBits}
-    # — bits ≈ 16 x items keeps extraction overhead ~fpp*corpus tiny.
-    fetch_bloom_items: int = 4_000_000
-    fetch_bloom_bits: int = 64 * 1024 * 1024
 
     def round_ts(self, rnd: int) -> dt.datetime:
         """Start instant of round ``rnd`` (1-based) on the crawl clock."""

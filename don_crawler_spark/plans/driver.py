@@ -23,26 +23,6 @@ from don_crawler_spark.plans.round import frontier_from_seeds, run_round
 SEEN_SCHEMA = "url_hash long, url string, first_round int"
 
 
-def _choose_fetch_join(n_frontier: int, cfg: CrawlConfig) -> str:
-    """Pick the round's selected-set x pages join strategy (see the GUARD
-    note in plans/round.py). ``n_frontier`` is the EXACT row count of the
-    round's input frontier, read from the checkpoint's parquet footers
-    (CheckpointStore.row_count — driver-side metadata, zero Spark jobs
-    per round). It soundly bounds the selected set (selected ⊆ deduped
-    frontier ⊆ frontier rows); broadcast only under
-    cfg.fetch_broadcast_limit.
-
-    A budgets-dimension bound (Σ host budgets) would be UNSOUND: frontier
-    hosts absent from the dimension each get the default cap via the
-    coalesce in round.py, so with many uncovered hosts (the normal case
-    for newly discovered hosts at production scale) the bound reads small
-    and the guard fails open onto a multi-GB broadcast. The frontier
-    count errs only toward "shuffle", which the bloom-pruned shuffle path
-    keeps O(selected), never toward an OOM.
-    """
-    return "broadcast" if n_frontier <= cfg.fetch_broadcast_limit else "shuffle"
-
-
 @dataclass
 class CrawlSummary:
     rounds: int = 0
@@ -116,14 +96,15 @@ def run_crawl(
     frontier = store.read_table(spark, start_round, "frontier")
     seen = store.read_seen(spark, start_round) or _empty_seen(spark)
 
+    # exact, from parquet footers (no Spark job); sizes the round's
+    # Bloom prune of the pages scan
     n_frontier = store.row_count(start_round, "frontier")
 
     for rnd in range(start_round + 1, cfg.max_rounds + 1):
         t0 = time.monotonic()
-        fetch_join = _choose_fetch_join(n_frontier, cfg)
         out = run_round(
-            cfg, rnd, frontier, seen, pages, robots, budgets,
-            transient=transient, redirects=redirects, fetch_join=fetch_join,
+            cfg, rnd, frontier, seen, pages, robots, budgets, n_frontier,
+            transient=transient, redirects=redirects,
         )
 
         # Materialize in dependency order; manifest commit is the txn point.
@@ -190,7 +171,6 @@ def run_crawl(
                 "selected": n_selected,
                 "fetched_200": n_200,
                 "wall_ms": wall_ms,
-                "fetch_join": fetch_join,
                 "n_frontier": n_frontier,
             },
         )

@@ -6,7 +6,7 @@ Catalyst-planned dataflow:
 
     frontier --dedup(url_hash)--> robots filter
         --> budget rank (per-host window) --> SELECTED | DEFERRED
-    SELECTED --join(pages on url_hash)--> status/extract/links
+    SELECTED --join(Bloom-pruned pages on url_hash)--> status/extract/links
         --> fetched_full (trace/fetched/seen-delta are projections)
     new links --anti-join(seen ∪ seen-delta)--> ∪ DEFERRED ∪ retries
         --> next frontier
@@ -44,6 +44,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from don_crawler_spark.functions import native_bloom
 from don_crawler_spark.functions.extract import (
     links_native_col,
     with_extracted_description,
@@ -173,9 +174,9 @@ def run_round(
     pages: DataFrame,
     robots: DataFrame,
     host_budgets: DataFrame,
+    n_frontier: int,
     persist: bool = True,
     transient: DataFrame | None = None,
-    fetch_join: str = "broadcast",
     redirects: DataFrame | None = None,
 ) -> RoundOutput:
     """Build the round-``rnd`` DAG. Nothing is executed here: the driver
@@ -191,12 +192,10 @@ def run_round(
     row was not selected, so it is not in the seen delta (and its input
     row was not in ``seen``), and a retriable 503 is not seen-eligible.
 
-    ``fetch_join``: join strategy for selected-set x pages — "broadcast"
-    (semi-join prune, selected set must fit an executor) or "shuffle"
-    (shuffle-hash on url_hash; the graceful-degradation path when the
-    selected set's bound exceeds CrawlConfig.fetch_broadcast_limit). The
-    driver picks per round (driver._choose_fetch_join); both shapes keep
-    html out of every exchange.
+    ``n_frontier`` is the exact row count of ``frontier`` (the driver
+    reads it from parquet footers, no Spark job). It bounds the selected
+    set (selected ⊆ deduped frontier), so it sizes the Bloom filter that
+    prunes the pages scan ahead of the fetch join.
     """
     f = _dedup_frontier(frontier)
 
@@ -287,21 +286,25 @@ def run_round(
     #
     # JOIN SHAPE (the scale-critical decision): the selected set is
     # politeness-bounded (≤ Σ host budgets per round) while pages is the
-    # whole corpus — so FIRST prune pages with a broadcast left-semi join
-    # on the selected keys (map-side scan, the corpus is never shuffled),
-    # THEN left-join the bounded slice back. Without this, the fetch join
-    # sort-merge-shuffles the full pages table (html payloads included)
-    # every round. At warehouse scale the same effect comes from
-    # bucket-pruned storage; the broadcast-semi form needs no layout.
+    # whole corpus. So FIRST prune the pages scan with a Catalyst Bloom
+    # filter over the selected url_hash keys (functions/native_bloom.py:
+    # bloom_filter_agg is a distributed aggregate with map-side partial
+    # merge, so the driver never sees a key, and might_contain evaluates
+    # map-side at the scan), THEN shuffle-hash join the pruned slice on
+    # the 8-byte url_hash. False positives only extract a few extra rows
+    # (the join is exact on (url_hash, url)), so extraction is
+    # O(selected + fpp*corpus) and nothing ever broadcasts the selected
+    # set, which runs to 10^7-10^8 rows at production budgets. At
+    # warehouse scale the same effect comes from bucket-pruned storage;
+    # the Bloom form needs no layout.
     #
-    # GUARD (r2 finding): at production budgets (10^7-10^8 selected rows
-    # per round) the sel_keys broadcast is multi-GB — a driver/executor
-    # OOM. The driver flips ``fetch_join`` to "shuffle" when the selected
-    # set's bound exceeds cfg.fetch_broadcast_limit: extraction then runs
-    # map-side over the full corpus scan (with huge budgets the round
-    # selects ~the whole reachable corpus anyway) and the join
-    # shuffle-hashes on the 8-byte url_hash. html still never crosses an
-    # exchange — only the extracted text + links do.
+    # SIZING: n_frontier items at 16 bits each (fpp ~5e-4). Spark clamps
+    # both arguments to spark.sql.optimizer.runtime.bloomFilter.
+    # {maxNumItems,maxNumBits} (defaults 4M items / 64M bits = 8 MB);
+    # raise those confs for 10^7+-row selected sets.
+    #
+    # GUARD: if the native expressions are unavailable the plan falls
+    # back to the un-pruned scan: degraded cost, same rows.
     if persist:
         selected = selected.persist()
     p = pages.select(
@@ -311,36 +314,12 @@ def run_round(
         "html",
         "lang",
     )
-    if fetch_join == "shuffle":
-        # MID-REGIME: extracting over EVERY page in the scan would cost
-        # O(corpus) per round when 1M < selected << corpus. So prune the
-        # scan with a Catalyst Bloom filter over the selected url_hash
-        # keys (functions/native_bloom.py: bloom_filter_agg is a
-        # distributed aggregate with map-side partial merge — the driver
-        # never sees the keys — and might_contain evaluates map-side at
-        # the scan). False positives only extract a few extra rows — the
-        # final join is exact on (url_hash, url) — so extraction is
-        # O(selected + fpp*corpus). html still never crosses an
-        # exchange. If the native expressions are unavailable the plan
-        # falls back to the un-pruned scan: degraded cost, same rows.
-        from don_crawler_spark.functions.native_bloom import bloom_membership_col
-
-        maybe_sel = bloom_membership_col(
-            selected.select("url_hash"),
-            "url_hash",
-            p["p_hash"],
-            cfg.fetch_bloom_items,
-            cfg.fetch_bloom_bits,
-        )
-        p_matched = p.filter(maybe_sel) if maybe_sel is not None else p
-    else:
-        sel_keys = selected.select("url_hash", "url")
-        p_matched = p.join(
-            F.broadcast(sel_keys),
-            (p["p_hash"] == sel_keys["url_hash"]) & (p["p_url"] == sel_keys["url"]),
-            "left_semi",
-        )
-    # X1 extraction + link discovery run HERE — map-side on the (pruned)
+    n_items = max(1, n_frontier)
+    maybe_sel = native_bloom.bloom_membership_col(
+        selected.select("url_hash"), "url_hash", p["p_hash"], n_items, 16 * n_items
+    )
+    p_matched = p.filter(maybe_sel) if maybe_sel is not None else p
+    # X1 extraction + link discovery run HERE — map-side on the pruned
     # pages scan, BEFORE the join shuffle. Payload bytes (html) never
     # cross an exchange: only the extracted text + hrefs do (~6x fewer
     # bytes on this corpus; on real web data 10-100x). Both kernels are
@@ -354,11 +333,7 @@ def run_round(
         "lang",
         "text",
         links_native_col(F.col("html")).alias("links"),
-    )
-    if fetch_join == "shuffle":
-        # shuffle-hash (not sort-merge): both sides hash-shuffle on the
-        # 8-byte key, no sort of the slim pages relation
-        p_slim = p_slim.hint("shuffle_hash")
+    ).hint("shuffle_hash")  # not sort-merge: no sort of the slim pages
     fetched_raw = selected.join(
         p_slim,
         (selected["url_hash"] == p_slim["p_hash"])

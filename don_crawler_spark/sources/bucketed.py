@@ -5,8 +5,8 @@ pages in the crawl) dominate shuffle volume. Spark's storage-side answer
 is bucketing: both relations are hash-partitioned BY THE SAME KEY INTO
 THE SAME NUMBER OF BUCKETS at write time, so a later equi-join on that
 key is exchange-free — each task zips bucket i with bucket i. The crawl
-engine gets the equivalent effect dynamically (broadcast-semi or
-bloom-pruned shuffle-hash, plans/round.py); this module is the static
+engine gets the equivalent effect dynamically (a Bloom-pruned
+shuffle-hash join, plans/round.py); this module is the static
 layout for the warehouse-style analytics tables, where the write is
 amortized over every downstream join and aggregation.
 

@@ -1,6 +1,6 @@
 """Physical-plan assertions: the optimizations the engine is designed
 around must actually appear in the executed plans (broadcasts, pushdowns,
-partial aggregation, no corpus-side shuffle in the fetch join)."""
+partial aggregation, no html in any exchange of the fetch join)."""
 
 from __future__ import annotations
 
@@ -66,9 +66,11 @@ def test_aggregation_is_partial_then_final(spark) -> None:
 
 
 def test_fetch_join_never_shuffles_pages(spark, tmp_path) -> None:
-    """The round DAG's contract: the pages table appears below a
-    broadcast-semi join (map-side prune), never below a shuffle exchange
-    that carries html payloads."""
+    """The round's one fetch shape: the pages scan is Bloom-pruned by the
+    selected keys BELOW extraction, then shuffle-hash joined on url_hash;
+    html never crosses an exchange and the selected set is never
+    broadcast."""
+    from don_crawler_spark.plans.checkpoint import CheckpointStore
     from don_crawler_spark.plans.config import CrawlConfig
     from don_crawler_spark.plans.driver import _empty_seen
     from don_crawler_spark.plans.round import frontier_from_seeds, run_round
@@ -76,98 +78,70 @@ def test_fetch_join_never_shuffles_pages(spark, tmp_path) -> None:
 
     corpus = str(tmp_path / "c")
     generate_corpus(corpus, n_pages=150, n_hosts=6, seed=21, n_publishers=3)
-    pages = spark.read.parquet(f"{corpus}/pages.parquet")
-    robots = spark.read.parquet(f"{corpus}/robots.parquet")
-    budgets = spark.read.parquet(f"{corpus}/host_budgets.parquet")
-    seeds = spark.read.parquet(f"{corpus}/seeds.parquet")
-    out = run_round(
-        CrawlConfig(),
-        1,
-        frontier_from_seeds(seeds),
-        _empty_seen(spark),
-        pages,
-        robots,
-        budgets,
-        persist=False,
-    )
-    plan = _optimized(out.fetched_full)
-    # the semi prune exists and is hinted broadcast
-    assert "LeftSemi" in plan
-    # html is pruned out of every post-extraction operator: the column
-    # survives only inside the scan->extract segment
-    final = _plan(out.fetched_full)
-    assert "html" in final  # read at the scan...
-    seg = final.split("Exchange")[0]  # ...but never above the last exchange
-    assert "html" not in seg
-
-
-def test_fetch_join_degrades_to_shuffle_hash_over_threshold(spark, tmp_path) -> None:
-    """GUARD (r2 finding): above cfg.fetch_broadcast_limit the selected
-    set must NOT be broadcast — the fetch join flips to a shuffle-hash on
-    url_hash, with extraction still map-side (html below the exchange)."""
-    import dataclasses
-
-    from don_crawler_spark.plans.checkpoint import CheckpointStore
-    from don_crawler_spark.plans.config import CrawlConfig
-    from don_crawler_spark.plans.driver import _choose_fetch_join, _empty_seen
-    from don_crawler_spark.plans.round import frontier_from_seeds, run_round
-    from don_crawler_spark.sources.synth import generate_corpus
-
-    corpus = str(tmp_path / "c")
-    generate_corpus(corpus, n_pages=150, n_hosts=6, seed=21, n_publishers=3)
-    pages = spark.read.parquet(f"{corpus}/pages.parquet")
-    robots = spark.read.parquet(f"{corpus}/robots.parquet")
-    budgets = spark.read.parquet(f"{corpus}/host_budgets.parquet")
     frontier = frontier_from_seeds(spark.read.parquet(f"{corpus}/seeds.parquet"))
 
-    # the chooser's frontier size comes from checkpoint parquet FOOTERS
-    # (no Spark job) — must agree with the DataFrame count exactly
+    # the Bloom is sized from the frontier count the driver reads from
+    # checkpoint parquet FOOTERS (no Spark job): it must be exact
     store = CheckpointStore(str(tmp_path / "ckpt"))
     store.write_table(frontier, 0, "frontier")
     n_frontier = store.row_count(0, "frontier")
     assert n_frontier == frontier.count()
 
-    # the driver's chooser flips with the threshold; the bound is the
-    # exact frontier size, NOT the budgets sum (r3 ADVICE: uncovered
-    # hosts made the budget bound fail open)
-    lean = CrawlConfig()
-    saturated = dataclasses.replace(
-        lean, default_max_per_round=10_000_000, round_budget_ms=60_000_000,
-        fetch_broadcast_limit=2,
-    )
-    assert _choose_fetch_join(n_frontier, lean) == "broadcast"
-    assert _choose_fetch_join(n_frontier, saturated) == "shuffle"
-
     out = run_round(
-        saturated, 1, frontier, _empty_seen(spark), pages, robots, budgets,
-        persist=False, fetch_join="shuffle",
+        CrawlConfig(), 1, frontier, _empty_seen(spark),
+        spark.read.parquet(f"{corpus}/pages.parquet"),
+        spark.read.parquet(f"{corpus}/robots.parquet"),
+        spark.read.parquet(f"{corpus}/host_budgets.parquet"),
+        n_frontier, persist=False,
     )
     plan = _plan(out.fetched_full)
     assert "ShuffledHashJoin" in plan
-    # no broadcast-semi prune of pages in shuffle mode (the broadcasts
-    # that remain are the small dimensions: robots rules, host budgets,
-    # seq offsets)
+    # no broadcast-semi prune of pages (the broadcasts that remain are
+    # the small dimensions: robots rules, host budgets, seq offsets)
     assert "LeftSemi, BuildRight" not in plan
-    # html still never crosses an exchange: extraction stays map-side
-    seg = plan.split("Exchange")[0]
-    assert "html" not in seg
-    # r4 (VERDICT #3): the corpus scan is bloom-pruned by the selected
-    # keys BEFORE extraction — extraction cost is O(selected), not
-    # O(corpus), in the mid-regime. The might_contain filter must sit
-    # BELOW the link-extraction projection (deeper in the printed tree).
+    # html is read at the scan but never above the last exchange:
+    # extraction stays map-side
+    assert "html" in plan
+    assert "html" not in plan.split("Exchange")[0]
+    # extraction is O(selected), not O(corpus): the might_contain filter
+    # sits BELOW the link-extraction projection (deeper in the tree)
     assert "might_contain" in plan
     assert plan.index("regexp_extract_all") < plan.index("might_contain")
 
-    # and the pruned plan returns the same rows as broadcast mode
-    out_b = run_round(
-        saturated, 1, frontier, _empty_seen(spark), pages, robots, budgets,
-        persist=False, fetch_join="broadcast",
-    )
-    cols = ["url", "status", "seq_in_round"]
-    got_s = sorted(map(tuple, out.fetched_full.select(*cols).collect()))
-    got_b = sorted(map(tuple, out_b.fetched_full.select(*cols).collect()))
-    assert got_s == got_b and len(got_s) > 0
 
+
+def test_fetch_join_degrades_to_shuffle_hash_over_threshold(spark, tmp_path) -> None:
+    """A frontier count far past any broadcast-sized set (10^9, over
+    Spark's runtime.bloomFilter caps too) keeps the one fetch shape: the
+    Bloom arguments are clamped by Spark, the join stays shuffle-hash, and
+    the fetched rows equal those of the round sized from the exact count."""
+    from don_crawler_spark.plans.config import CrawlConfig
+    from don_crawler_spark.plans.driver import _empty_seen
+    from don_crawler_spark.plans.round import frontier_from_seeds, run_round
+    from don_crawler_spark.sources.synth import generate_corpus
+
+    corpus = str(tmp_path / "c")
+    generate_corpus(corpus, n_pages=150, n_hosts=6, seed=21, n_publishers=3)
+    frontier = frontier_from_seeds(spark.read.parquet(f"{corpus}/seeds.parquet"))
+
+    def fetched(n_frontier):
+        return run_round(
+            CrawlConfig(), 1, frontier, _empty_seen(spark),
+            spark.read.parquet(f"{corpus}/pages.parquet"),
+            spark.read.parquet(f"{corpus}/robots.parquet"),
+            spark.read.parquet(f"{corpus}/host_budgets.parquet"),
+            n_frontier, persist=False,
+        ).fetched_full
+
+    exact, huge = fetched(frontier.count()), fetched(10**9)
+    plan = _plan(huge)
+    assert "ShuffledHashJoin" in plan
+    assert "LeftSemi, BuildRight" not in plan
+    assert "might_contain" in plan
+    cols = ["url", "status", "seq_in_round", "text"]
+    want = sorted(map(tuple, exact.select(*cols).collect()))
+    got = sorted(map(tuple, huge.select(*cols).collect()))
+    assert got == want and len(got) > 0
 
 def test_robots_filter_is_shuffle_free(spark) -> None:
     from don_crawler_spark.functions.robots import apply_robots_filter
@@ -208,14 +182,16 @@ def _round_on_fixture(spark, tmp_path, cfg, persist: bool):
 
     corpus = str(tmp_path / "c")
     generate_corpus(corpus, n_pages=150, n_hosts=6, seed=21, n_publishers=3)
+    frontier = frontier_from_seeds(spark.read.parquet(f"{corpus}/seeds.parquet"))
     return run_round(
         cfg,
         1,
-        frontier_from_seeds(spark.read.parquet(f"{corpus}/seeds.parquet")),
+        frontier,
         spark.createDataFrame([(0, "https://elsewhere.example/", 0)], SEEN_SCHEMA),
         spark.read.parquet(f"{corpus}/pages.parquet"),
         spark.read.parquet(f"{corpus}/robots.parquet"),
         spark.read.parquet(f"{corpus}/host_budgets.parquet"),
+        frontier.count(),
         persist=persist,
     )
 
@@ -305,6 +281,24 @@ def test_seen_check_runs_on_new_links_only(spark, tmp_path) -> None:
     assert ["LeftAnti" in b for b in branches] == [False, True, False]
 
 
+def test_fetch_falls_back_to_unpruned_scan(spark, tmp_path, monkeypatch) -> None:
+    """Without the native Bloom expressions the round scans pages
+    un-pruned: no might_contain in the plan, the same fetched rows."""
+    from don_crawler_spark.functions import native_bloom
+    from don_crawler_spark.plans.config import CrawlConfig
+
+    cols = ["url", "status", "seq_in_round", "text"]
+    pruned = _round_on_fixture(spark, tmp_path / "a", CrawlConfig(), persist=False)
+    assert "might_contain" in _plan(pruned.fetched_full)
+    want = sorted(map(tuple, pruned.fetched_full.select(*cols).collect()))
+
+    monkeypatch.setattr(native_bloom, "bloom_membership_col", lambda *a: None)
+    unpruned = _round_on_fixture(spark, tmp_path / "b", CrawlConfig(), persist=False)
+    assert "might_contain" not in _plan(unpruned.fetched_full)
+    got = sorted(map(tuple, unpruned.fetched_full.select(*cols).collect()))
+    assert got == want and len(got) > 0
+
+
 def test_topk_uses_window_group_limit(spark) -> None:
     """Catalyst pushes the rank<=k filter into a WindowGroupLimit
     (partial+final top-k, the T1/T5 'PerPage: 1' pushdown analogue —
@@ -363,7 +357,7 @@ def test_round_plan_has_no_unpartitioned_window(spark) -> None:
     frontier = frontier_from_seeds(seeds)
     seen = spark.createDataFrame([], "url_hash long, url string, first_round int")
     out = run_round(CrawlConfig(), 1, frontier, seen, pages, robots, budgets,
-                    persist=False)
+                    frontier.count(), persist=False)
     n_windows = 0
     for df in (out.fetched_full, out.new_frontier):
         nodes = json.loads(df._jdf.queryExecution().optimizedPlan().toJSON())

@@ -253,8 +253,8 @@ def test_lsh_fine_buckets_on_clustered_embeddings(spark) -> None:
 
 def test_persist_shingles_row_identical(spark) -> None:
     """persist_shingles is a pure execution hint (MEMORY_AND_DISK persist
-    of the exploded shingle relation, measured faster in
-    BENCH/regress_probe.py --persist): rows must be identical to the
+    of the exploded shingle relation, measured faster on the
+    ``dedup_ngram`` query): rows must be identical to the
     recompute shape for both shingle-based dedup families."""
     from don_crawler_spark.operators.dedup import (
         minhash_lsh_pairs,
