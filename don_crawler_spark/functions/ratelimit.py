@@ -13,10 +13,11 @@ are mirrored in tests/test_ratelimit.py):
   * candidates after ``now + 24h`` are discarded
   * the LATEST surviving candidate wins; none -> (zero, False)
 
-The engine applies this at ingest (building the ``host_budgets`` state
-table): epoch columns via native ``F.to_timestamp``/``F.greatest``; the
-pure-Python version is used by the oracle and by the synthetic corpus
-generator.
+Nothing in the crawl calls it: the ``host_budgets`` state table carries
+``not_before_ts`` precomputed (the synthetic corpus generator draws it
+directly), and the engine and the oracle only compare it with the round
+start. This module is the reference semantics an ingest step that builds
+that column from response headers must follow.
 """
 
 from __future__ import annotations

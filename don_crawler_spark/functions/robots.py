@@ -20,7 +20,7 @@ executor memory after the host-equi join prunes).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
@@ -186,11 +186,16 @@ def _selected_group_lines(
     return lines.filter(~is_ua).join(selected, ["host", "gid"])
 
 
-def compile_rules(robots: DataFrame) -> DataFrame:
+def compile_rules(robots: DataFrame, *carry: str) -> DataFrame:
     """Aggregate a host's rules into ONE array column, sorted so the
     winning rule is the first prefix match: longest prefix first, allow
     before deny on length ties (RFC 9309 least-restrictive). The result
-    is a per-host dimension row — tiny, broadcastable."""
+    is a per-host dimension row — tiny, broadcastable.
+
+    Rows with a null ``path_prefix`` carry no rule (a host with none gets
+    an empty array, i.e. allows everything). Each ``carry`` column rides
+    along as its per-host ``max``, so one aggregate over
+    ``robots ∪ host_budgets`` builds the crawl's whole host dimension."""
     rule = F.struct(
         (-F.length("path_prefix")).alias("neg_len"),
         (~F.col("allow")).cast("int").alias("deny_rank"),
@@ -198,8 +203,25 @@ def compile_rules(robots: DataFrame) -> DataFrame:
         F.col("allow").alias("allow"),
     )
     return robots.groupBy("host").agg(
-        F.sort_array(F.collect_list(rule)).alias("rules")
+        F.sort_array(
+            F.collect_list(F.when(F.col("path_prefix").isNotNull(), rule))
+        ).alias("rules"),
+        *(F.max(c).alias(c) for c in carry),
     )
+
+
+def robots_allowed_col(rules: Column, path: Column) -> Column:
+    """Verdict of a :func:`compile_rules` array for ``path``: the first
+    prefix match's ``allow``; allowed when nothing matches or ``rules``
+    is null (a host with no robots rules)."""
+    # try_element_at, not element_at: a host can HAVE rules yet match
+    # none of them (empty filtered array -> null, i.e. allowed), and
+    # ANSI element_at throws on index 1 of an empty array
+    first_match = F.try_element_at(
+        F.filter(rules, lambda r: path.startswith(r["path_prefix"])),
+        F.lit(1),
+    )
+    return F.coalesce(first_match["allow"], F.lit(True))
 
 
 def apply_robots_filter(
@@ -213,21 +235,9 @@ def apply_robots_filter(
     element_at), so NO shuffle of the frontier happens here — at 10^10
     frontier rows this stage costs one broadcast and one pass.
     """
-    compiled = compile_rules(robots)
-    joined = frontier.join(F.broadcast(compiled), "host", "left")
-    # try_element_at, not element_at: a host can HAVE rules yet match
-    # none of them (empty filtered array -> null, i.e. allowed), and
-    # ANSI element_at throws on index 1 of an empty array
-    first_match = F.try_element_at(
-        F.filter(
-            F.col("rules"),
-            lambda r: F.col("path").startswith(r["path_prefix"]),
-        ),
-        F.lit(1),
-    )
+    joined = frontier.join(F.broadcast(compile_rules(robots)), "host", "left")
     resolved = joined.withColumn(
-        "__allowed",
-        F.coalesce(first_match["allow"], F.lit(True)),
+        "__allowed", robots_allowed_col(F.col("rules"), F.col("path"))
     ).drop("rules")
     allowed = resolved.filter(F.col("__allowed")).drop("__allowed")
     denied = resolved.filter(~F.col("__allowed")).drop("__allowed")

@@ -16,6 +16,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from don_crawler_spark.functions.robots import compile_rules
 from don_crawler_spark.plans.checkpoint import CheckpointStore
 from don_crawler_spark.plans.config import CrawlConfig
 from don_crawler_spark.plans.round import frontier_from_seeds, run_round
@@ -36,6 +37,42 @@ def _empty_seen(spark: SparkSession) -> DataFrame:
     return spark.createDataFrame([], SEEN_SCHEMA)
 
 
+def load_corpus(
+    spark: SparkSession, corpus_dir: str
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """Read a corpus directory once per crawl -> ``(pages, hosts, urls)``.
+
+    Every table is required: a missing one raises ``AnalysisException``
+    before any round runs. Each dimension is ONE aggregate over a union
+    (a join-built one cost polite CPU):
+    ``hosts(host, rules, crawl_delay_ms, max_per_round, not_before_ts)``
+    from ``robots ∪ host_budgets``, ``urls(url, fail_rounds, target)``
+    from ``transient ∪ redirects``.
+    """
+
+    def read(table: str) -> DataFrame:
+        return spark.read.parquet(f"{corpus_dir}/{table}.parquet")
+
+    hosts = compile_rules(
+        read("robots").unionByName(
+            read("host_budgets"), allowMissingColumns=True
+        ),
+        "crawl_delay_ms",
+        "max_per_round",
+        "not_before_ts",
+    )
+    urls = (
+        read("transient")
+        .unionByName(read("redirects"), allowMissingColumns=True)
+        .groupBy("url")
+        .agg(
+            F.max("fail_rounds").alias("fail_rounds"),
+            F.max("target").alias("target"),
+        )
+    )
+    return read("pages"), hosts, urls
+
+
 def run_crawl(
     spark: SparkSession,
     corpus_dir: str,
@@ -53,25 +90,9 @@ def run_crawl(
     cfg = config or CrawlConfig()
     store = CheckpointStore(checkpoint_dir)
 
-    import os
-
     import pyarrow.dataset as ds
 
-    pages = spark.read.parquet(f"{corpus_dir}/pages.parquet")
-    robots = spark.read.parquet(f"{corpus_dir}/robots.parquet")
-    budgets = spark.read.parquet(f"{corpus_dir}/host_budgets.parquet")
-    transient = None
-    if os.path.exists(f"{corpus_dir}/transient.parquet"):
-        transient = spark.read.parquet(f"{corpus_dir}/transient.parquet")
-    redirects = None
-    redirects_path = f"{corpus_dir}/redirects.parquet"
-    # tolerate pre-redirect cached corpora AND empty tables alike; the
-    # row count comes from parquet footers (no Spark job), for a single
-    # file and a part-file directory alike
-    if os.path.exists(redirects_path) and ds.dataset(
-        redirects_path, format="parquet"
-    ).count_rows():
-        redirects = spark.read.parquet(redirects_path)
+    pages, hosts, urls = load_corpus(spark, corpus_dir)
 
     summary = CrawlSummary()
     start_round = store.latest_round()
@@ -102,10 +123,7 @@ def run_crawl(
 
     for rnd in range(start_round + 1, cfg.max_rounds + 1):
         t0 = time.monotonic()
-        out = run_round(
-            cfg, rnd, frontier, seen, pages, robots, budgets, n_frontier,
-            transient=transient, redirects=redirects,
-        )
+        out = run_round(cfg, rnd, frontier, seen, pages, hosts, urls, n_frontier)
 
         # Materialize in dependency order; manifest commit is the txn point.
         # The fetched_full write runs FIRST and alone: it populates the

@@ -50,16 +50,10 @@ def crawl_oracle(corpus_dir: str, config: CrawlConfig | None = None) -> OracleRe
         u: h for u, h in zip(pages_tbl["url"], pages_tbl["html"])
     }
     seeds_tbl = pq.read_table(f"{corpus_dir}/seeds.parquet").to_pydict()
-    import os
-
-    transient: dict[str, int] = {}
-    if os.path.exists(f"{corpus_dir}/transient.parquet"):
-        t_tbl = pq.read_table(f"{corpus_dir}/transient.parquet").to_pydict()
-        transient = dict(zip(t_tbl["url"], t_tbl["fail_rounds"]))
-    redirects: dict[str, str] = {}
-    if os.path.exists(f"{corpus_dir}/redirects.parquet"):
-        r_tbl = pq.read_table(f"{corpus_dir}/redirects.parquet").to_pydict()
-        redirects = dict(zip(r_tbl["url"], r_tbl["target"]))
+    t_tbl = pq.read_table(f"{corpus_dir}/transient.parquet").to_pydict()
+    transient: dict[str, int] = dict(zip(t_tbl["url"], t_tbl["fail_rounds"]))
+    r_tbl = pq.read_table(f"{corpus_dir}/redirects.parquet").to_pydict()
+    redirects: dict[str, str] = dict(zip(r_tbl["url"], r_tbl["target"]))
     robots_tbl = pq.read_table(f"{corpus_dir}/robots.parquet").to_pydict()
     robots: dict[str, list[tuple[str, bool]]] = {}
     for h, p, a in zip(
@@ -67,14 +61,13 @@ def crawl_oracle(corpus_dir: str, config: CrawlConfig | None = None) -> OracleRe
     ):
         robots.setdefault(h, []).append((p, a))
     budgets_tbl = pq.read_table(f"{corpus_dir}/host_budgets.parquet").to_pydict()
-    nbts = budgets_tbl.get("not_before_ts") or [None] * len(budgets_tbl["host"])
     budget_params: dict[str, tuple] = {
         h: (d, m, nb)
         for h, d, m, nb in zip(
             budgets_tbl["host"],
             budgets_tbl["crawl_delay_ms"],
             budgets_tbl["max_per_round"],
-            nbts,
+            budgets_tbl["not_before_ts"],
         )
     }
 

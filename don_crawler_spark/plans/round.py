@@ -4,9 +4,10 @@ This replaces the reference's goroutine pipeline (scan workers -> buffered
 channel -> process workers, crawler/crawler.go:156-195,642-669) with a
 Catalyst-planned dataflow:
 
-    frontier --dedup(url_hash)--> robots filter
+    frontier --dedup(url_hash)--join(host dimension)--> robots filter
         --> budget rank (per-host window) --> SELECTED | DEFERRED
-    SELECTED --join(Bloom-pruned pages on url_hash)--> status/extract/links
+    SELECTED --join(Bloom-pruned pages on url_hash)--> extract/links
+        --join(URL dimension)--> status
         --> fetched_full (trace/fetched/seen-delta are projections)
     new links --anti-join(seen ∪ seen-delta)--> ∪ DEFERRED ∪ retries
         --> next frontier
@@ -49,7 +50,7 @@ from don_crawler_spark.functions.extract import (
     links_native_col,
     with_extracted_description,
 )
-from don_crawler_spark.functions.robots import apply_robots_filter
+from don_crawler_spark.functions.robots import robots_allowed_col
 from don_crawler_spark.functions.urls import (
     add_canonical_url,
     host_col,
@@ -150,20 +151,19 @@ def _dedup_frontier(frontier: DataFrame) -> DataFrame:
     )
 
 
-def _budget_expr(cfg: CrawlConfig, rnd: int, has_not_before: bool):
+def _budget_expr(cfg: CrawlConfig, rnd: int):
     """budget(host) = min(max_per_round, round_budget_ms / crawl_delay_ms),
     or 0 while the host backs off (not_before_ts > round start) — MUST be
-    the same arithmetic as CrawlConfig.host_budget."""
+    the same arithmetic as CrawlConfig.host_budget. A host missing from
+    the host dimension reads null for all three inputs, so it gets the
+    default delay and cap and no back-off."""
     delay = F.coalesce(F.col("crawl_delay_ms"), F.lit(cfg.default_crawl_delay_ms))
     cap = F.coalesce(F.col("max_per_round"), F.lit(cfg.default_max_per_round))
-    budget = F.least(cap.cast("long"), F.floor(F.lit(cfg.round_budget_ms) / delay))
-    if has_not_before:
-        budget = F.when(
-            F.col("not_before_ts").isNotNull()
-            & (F.col("not_before_ts") > F.lit(cfg.round_ts(rnd))),
-            F.lit(0).cast("long"),
-        ).otherwise(budget)
-    return budget
+    return F.when(
+        F.col("not_before_ts") > F.lit(cfg.round_ts(rnd)), F.lit(0).cast("long")
+    ).otherwise(
+        F.least(cap.cast("long"), F.floor(F.lit(cfg.round_budget_ms) / delay))
+    )
 
 
 def run_round(
@@ -172,12 +172,10 @@ def run_round(
     frontier: DataFrame,
     seen: DataFrame,
     pages: DataFrame,
-    robots: DataFrame,
-    host_budgets: DataFrame,
+    hosts: DataFrame,
+    urls: DataFrame,
     n_frontier: int,
     persist: bool = True,
-    transient: DataFrame | None = None,
-    redirects: DataFrame | None = None,
 ) -> RoundOutput:
     """Build the round-``rnd`` DAG. Nothing is executed here: the driver
     runs the round's jobs when it writes the outputs to the checkpoint.
@@ -196,28 +194,17 @@ def run_round(
     reads it from parquet footers, no Spark job). It bounds the selected
     set (selected ⊆ deduped frontier), so it sizes the Bloom filter that
     prunes the pages scan ahead of the fetch join.
+
+    ``hosts`` and ``urls`` are the corpus dimensions of
+    ``driver.load_corpus``, each broadcast-joined once.
     """
-    f = _dedup_frontier(frontier)
-
-    # robots allow/deny (longest-prefix, broadcast dimension)
-    allowed, _denied = apply_robots_filter(f, robots)
-
-    # politeness budget: broadcast host dimension + per-host ranked cut (T5)
-    has_not_before = "not_before_ts" in host_budgets.columns
-    b = host_budgets.select(
-        "host", _budget_expr(cfg, rnd, has_not_before).alias("budget")
-    )
-    allowed = allowed.join(F.broadcast(b), "host", "left").withColumn(
-        "budget",
-        F.coalesce(
-            F.col("budget"),
-            F.lit(
-                min(
-                    cfg.default_max_per_round,
-                    cfg.round_budget_ms // cfg.default_crawl_delay_ms,
-                )
-            ).cast("long"),
-        ),
+    # one broadcast join against the host dimension feeds both the
+    # robots allow/deny (longest-prefix) and the politeness budget
+    allowed = (
+        _dedup_frontier(frontier)
+        .join(F.broadcast(hosts), "host", "left")
+        .filter(robots_allowed_col(F.col("rules"), F.col("path")))
+        .select(*FRONTIER_COLS, _budget_expr(cfg, rnd).alias("budget"))
     )
 
     w_host = Window.partitionBy("host").orderBy("depth", "url_hash")
@@ -341,40 +328,22 @@ def run_round(
         "left",
     ).drop("p_hash", "p_url")
 
-    # redirect aliases: a tiny dimension (url -> target) joined broadcast;
-    # a matched row is a 301 whose only "link" is its Location target.
-    if redirects is not None:
-        r = redirects.select(
-            F.col("url").alias("r_url"), F.col("target").alias("r_target")
-        )
-        fetched_raw = fetched_raw.join(
-            F.broadcast(r), fetched_raw["url"] == r["r_url"], "left"
-        ).drop("r_url")
-    else:
-        fetched_raw = fetched_raw.withColumn(
-            "r_target", F.lit(None).cast("string")
-        )
+    # per-URL fetch outcomes: one broadcast join against the URL
+    # dimension (redirect target, transient fail_rounds)
+    fetched_raw = fetched_raw.join(F.broadcast(urls), "url", "left")
 
     # status: redirect alias -> 301 (checked first: aliases have no page
     # row and must not read as 404, and a 301 is final even in a
     # transient window); no page -> 404 (dead link); transient window ->
     # 503 (P6/P7 retry path); else 200. 503 attempts yield no text/links.
-    status = F.when(F.col("r_target").isNotNull(), F.lit(301)).when(
-        F.col("text").isNull(), F.lit(404)
+    status = (
+        F.when(F.col("target").isNotNull(), F.lit(301))
+        .when(F.col("text").isNull(), F.lit(404))
+        .when(F.lit(rnd) <= F.col("fail_rounds"), F.lit(503))
+        .otherwise(F.lit(200))
     )
-    if transient is not None:
-        t = transient.select(
-            F.col("url").alias("t_url"), F.col("fail_rounds").alias("fail_rounds")
-        )
-        fetched_raw = fetched_raw.join(
-            F.broadcast(t), fetched_raw["url"] == t["t_url"], "left"
-        ).drop("t_url")
-        status = status.when(
-            F.col("fail_rounds").isNotNull() & (F.lit(rnd) <= F.col("fail_rounds")),
-            F.lit(503),
-        )
     enriched = (
-        fetched_raw.withColumn("status", status.otherwise(F.lit(200)))
+        fetched_raw.withColumn("status", status)
         .withColumn(
             "text",
             F.when(F.col("status") == 200, F.col("text")).otherwise(
@@ -391,7 +360,7 @@ def run_round(
                 # a 301's single outlink is its Location target, resolved
                 # downstream against the alias URL like any href
                 (F.col("status") == 301) & (F.col("depth") + 1 <= cfg.max_depth),
-                F.array(F.col("r_target")),
+                F.array(F.col("target")),
             )
             .otherwise(F.array().cast("array<string>")),
         )

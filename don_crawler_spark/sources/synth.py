@@ -6,7 +6,9 @@ BASELINE.json's input_hint shape for pages:
   pages(url string, warc_ts timestamp, html binary, text string, lang string)
   seeds(publisher_id, publisher_name, org_url, repo_urls, organisation_url)
   robots(host, path_prefix, allow)
-  host_budgets(host, crawl_delay_ms, max_per_round)
+  host_budgets(host, crawl_delay_ms, max_per_round, not_before_ts)
+  transient(url, fail_rounds)
+  redirects(url, target)
 
 Everything is a pure function of (seed, n_pages): python's random.Random —
 no wall clock, no global state — so every scale regenerates byte-identically.
@@ -344,9 +346,7 @@ def generate_corpus(
     paths["transient"] = os.path.join(out_dir, "transient.parquet")
     pq.write_table(transient_tbl, paths["transient"])
 
-    # 301 aliases (possibly empty). NOT in CORPUS_TABLES: corpora cached
-    # before this table existed stay valid — loaders treat a missing file
-    # as "no redirects".
+    # 301 aliases (possibly empty)
     redirects_tbl = pa.table(
         {
             "url": pa.array([r[0] for r in redirect_rows], pa.string()),
@@ -365,6 +365,7 @@ CORPUS_TABLES = (
     "robots.parquet",
     "host_budgets.parquet",
     "transient.parquet",
+    "redirects.parquet",
 )
 
 

@@ -28,7 +28,9 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 def main() -> None:
     ap = argparse.ArgumentParser()
-    ap.add_argument("--corpus", required=True, help="corpus dir (pages/seeds/robots/host_budgets)")
+    ap.add_argument("--corpus", required=True,
+                    help="corpus dir holding pages, seeds, robots, host_budgets, "
+                         "transient and redirects (.parquet), all required")
     ap.add_argument("--checkpoint", required=True, help="snapshot checkpoint root")
     ap.add_argument("--rounds", type=int, default=20)
     ap.add_argument("--round-budget-ms", type=int, default=60_000)

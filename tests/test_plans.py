@@ -72,7 +72,7 @@ def test_fetch_join_never_shuffles_pages(spark, tmp_path) -> None:
     broadcast."""
     from don_crawler_spark.plans.checkpoint import CheckpointStore
     from don_crawler_spark.plans.config import CrawlConfig
-    from don_crawler_spark.plans.driver import _empty_seen
+    from don_crawler_spark.plans.driver import _empty_seen, load_corpus
     from don_crawler_spark.plans.round import frontier_from_seeds, run_round
     from don_crawler_spark.sources.synth import generate_corpus
 
@@ -89,15 +89,12 @@ def test_fetch_join_never_shuffles_pages(spark, tmp_path) -> None:
 
     out = run_round(
         CrawlConfig(), 1, frontier, _empty_seen(spark),
-        spark.read.parquet(f"{corpus}/pages.parquet"),
-        spark.read.parquet(f"{corpus}/robots.parquet"),
-        spark.read.parquet(f"{corpus}/host_budgets.parquet"),
-        n_frontier, persist=False,
+        *load_corpus(spark, corpus), n_frontier, persist=False,
     )
     plan = _plan(out.fetched_full)
     assert "ShuffledHashJoin" in plan
     # no broadcast-semi prune of pages (the broadcasts that remain are
-    # the small dimensions: robots rules, host budgets, seq offsets)
+    # the host dimension, the URL dimension and the seq offsets)
     assert "LeftSemi, BuildRight" not in plan
     # html is read at the scan but never above the last exchange:
     # extraction stays map-side
@@ -116,7 +113,7 @@ def test_fetch_join_degrades_to_shuffle_hash_over_threshold(spark, tmp_path) -> 
     Bloom arguments are clamped by Spark, the join stays shuffle-hash, and
     the fetched rows equal those of the round sized from the exact count."""
     from don_crawler_spark.plans.config import CrawlConfig
-    from don_crawler_spark.plans.driver import _empty_seen
+    from don_crawler_spark.plans.driver import _empty_seen, load_corpus
     from don_crawler_spark.plans.round import frontier_from_seeds, run_round
     from don_crawler_spark.sources.synth import generate_corpus
 
@@ -127,10 +124,7 @@ def test_fetch_join_degrades_to_shuffle_hash_over_threshold(spark, tmp_path) -> 
     def fetched(n_frontier):
         return run_round(
             CrawlConfig(), 1, frontier, _empty_seen(spark),
-            spark.read.parquet(f"{corpus}/pages.parquet"),
-            spark.read.parquet(f"{corpus}/robots.parquet"),
-            spark.read.parquet(f"{corpus}/host_budgets.parquet"),
-            n_frontier, persist=False,
+            *load_corpus(spark, corpus), n_frontier, persist=False,
         ).fetched_full
 
     exact, huge = fetched(frontier.count()), fetched(10**9)
@@ -176,7 +170,7 @@ def test_no_python_udf_in_native_queries(spark) -> None:
 def _round_on_fixture(spark, tmp_path, cfg, persist: bool):
     """Round 1 over the 150-page / 6-host corpus, against a one-row seen
     set (an empty one would let Catalyst drop the anti-join)."""
-    from don_crawler_spark.plans.driver import SEEN_SCHEMA
+    from don_crawler_spark.plans.driver import SEEN_SCHEMA, load_corpus
     from don_crawler_spark.plans.round import frontier_from_seeds, run_round
     from don_crawler_spark.sources.synth import generate_corpus
 
@@ -188,9 +182,7 @@ def _round_on_fixture(spark, tmp_path, cfg, persist: bool):
         1,
         frontier,
         spark.createDataFrame([(0, "https://elsewhere.example/", 0)], SEEN_SCHEMA),
-        spark.read.parquet(f"{corpus}/pages.parquet"),
-        spark.read.parquet(f"{corpus}/robots.parquet"),
-        spark.read.parquet(f"{corpus}/host_budgets.parquet"),
+        *load_corpus(spark, corpus),
         frontier.count(),
         persist=persist,
     )
@@ -281,6 +273,47 @@ def test_seen_check_runs_on_new_links_only(spark, tmp_path) -> None:
     assert ["LeftAnti" in b for b in branches] == [False, True, False]
 
 
+def _stacked_broadcast_joins(plan: str, key: str) -> list[str]:
+    """BroadcastHashJoin lines keyed on ``key`` alone whose nearest join
+    below (the first join line in the node's own subtree) is another
+    BroadcastHashJoin keyed on ``key``."""
+    import re
+
+    lines = plan.splitlines()
+    depth = [len(line) - len(line.lstrip(" :+-")) for line in lines]
+
+    def bhj_on_key(line: str) -> bool:
+        m = re.search(r"BroadcastHashJoin \[([^\]]*)\]", line)
+        return m is not None and re.sub(r"#\d+L?", "", m.group(1)) == key
+
+    stacked = []
+    for i, line in enumerate(lines):
+        if not bhj_on_key(line):
+            continue
+        for j in range(i + 1, len(lines)):
+            if depth[j] <= depth[i]:
+                break
+            if "Join" in lines[j]:
+                if bhj_on_key(lines[j]):
+                    stacked.append(f"{line.strip()} over {lines[j].strip()}")
+                break
+    return stacked
+
+
+def test_round_joins_each_dimension_once(spark, tmp_path) -> None:
+    """The host dimension (robots rules + budget inputs) and the URL
+    dimension (redirect target + transient fail_rounds) are each one
+    broadcast join: no BroadcastHashJoin on ``host`` (or ``url``) sits
+    directly above another on the same key in the executed plan."""
+    from don_crawler_spark.plans.config import CrawlConfig
+
+    out = _round_on_fixture(spark, tmp_path, CrawlConfig(), persist=False)
+    plan = _final_plan(out.fetched_full)
+    for key in ("host", "url"):
+        assert "BroadcastHashJoin [" + key + "#" in plan, key
+        assert _stacked_broadcast_joins(plan, key) == [], key
+
+
 def test_fetch_falls_back_to_unpruned_scan(spark, tmp_path, monkeypatch) -> None:
     """Without the native Bloom expressions the round scans pages
     un-pruned: no might_contain in the plan, the same fetched rows."""
@@ -345,18 +378,16 @@ def test_round_plan_has_no_unpartitioned_window(spark) -> None:
     import tempfile
 
     from don_crawler_spark.plans.config import CrawlConfig
+    from don_crawler_spark.plans.driver import load_corpus
     from don_crawler_spark.plans.round import frontier_from_seeds, run_round
     from don_crawler_spark.sources.synth import corpus_dir_for
 
     base = tempfile.mkdtemp(prefix="plan_corpus_")
     corpus = corpus_dir_for(base, n_pages=300)
-    pages = spark.read.parquet(f"{corpus}/pages.parquet")
-    robots = spark.read.parquet(f"{corpus}/robots.parquet")
-    budgets = spark.read.parquet(f"{corpus}/host_budgets.parquet")
     seeds = spark.read.parquet(f"{corpus}/seeds.parquet")
     frontier = frontier_from_seeds(seeds)
     seen = spark.createDataFrame([], "url_hash long, url string, first_round int")
-    out = run_round(CrawlConfig(), 1, frontier, seen, pages, robots, budgets,
+    out = run_round(CrawlConfig(), 1, frontier, seen, *load_corpus(spark, corpus),
                     frontier.count(), persist=False)
     n_windows = 0
     for df in (out.fetched_full, out.new_frontier):
