@@ -18,6 +18,14 @@ Layout:
 
 ``trace``, ``fetched`` and ``seen_delta`` are virtual: read-time
 projections of ``fetched_full`` (see ``CheckpointStore._VIRTUAL``).
+
+The crawl's reads declare their schemas, so none runs a Spark
+schema-inference job: ``read_table`` of the frontier
+(``round.FRONTIER_SCHEMA``) and ``read_seen`` (``SEEN_SCHEMA`` plus
+``__seen_eligible``). The driver reads the corpus tables the same way
+(``sources.synth.CORPUS_SCHEMAS``). ``read_declared`` checks every
+file's footer for the declared columns first; other tables
+(``fetched_full``, ``metrics``, ``read_all``) are read with inference.
 """
 
 from __future__ import annotations
@@ -27,6 +35,58 @@ import os
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import (
+    BooleanType,
+    IntegerType,
+    LongType,
+    StringType,
+    StructField,
+    StructType,
+)
+
+from don_crawler_spark.plans.round import FRONTIER_SCHEMA
+
+SEEN_SCHEMA = StructType(
+    [
+        StructField("url_hash", LongType()),
+        StructField("url", StringType()),
+        StructField("first_round", IntegerType()),
+    ]
+)
+
+
+def parquet_files(path: str) -> list[str]:
+    """The data files of a parquet table: the file itself, or a
+    directory's ``*.parquet`` entries (Spark's ``_SUCCESS`` and ``.crc``
+    side files excluded)."""
+    if not os.path.isdir(path):
+        return [path]
+    return [
+        os.path.join(path, e)
+        for e in sorted(os.listdir(path))
+        if e.endswith(".parquet") and not e.startswith((".", "_"))
+    ]
+
+
+def read_declared(
+    spark: SparkSession, schema: StructType, *paths: str
+) -> DataFrame:
+    """Read parquet ``paths`` with a declared ``schema``: no inference
+    job. A declared schema alone would read a missing column as null, so
+    every file's footer is checked on the driver first (pyarrow, no
+    Spark job); a missing one raises ``ValueError``, before any round
+    when the driver loads its inputs. A column of the wrong type fails
+    the first scan of it, before the round commits. A missing path
+    raises Spark's ``AnalysisException``, as an inferring read does."""
+    import pyarrow.parquet as pq
+
+    df = spark.read.schema(schema).parquet(*paths)
+    for path in paths:
+        for f in parquet_files(path):
+            missing = set(schema.fieldNames()) - set(pq.read_schema(f).names)
+            if missing:
+                raise ValueError(f"{f} lacks column(s) {sorted(missing)}")
+    return df
 
 
 class CheckpointStore:
@@ -76,6 +136,9 @@ class CheckpointStore:
     # rows excluded from the seen projection: retriable 503 attempts
     # (P6/P7 — they requeue, so they must stay invisible to the anti-join)
     _SEEN_FILTER_COL = "__seen_eligible"
+    _SEEN_READ_SCHEMA = StructType(
+        SEEN_SCHEMA.fields + [StructField(_SEEN_FILTER_COL, BooleanType())]
+    )
     _FETCHED_INTERNAL = {
         "seq_in_round",
         "host",
@@ -100,15 +163,16 @@ class CheckpointStore:
         dimension (each uncovered host silently gets the default cap)."""
         import pyarrow.parquet as pq
 
-        path = self.table_path(rnd, name)
-        total = 0
-        for entry in os.listdir(path):
-            if entry.endswith(".parquet"):
-                total += pq.ParquetFile(os.path.join(path, entry)).metadata.num_rows
-        return total
+        return sum(
+            pq.ParquetFile(f).metadata.num_rows
+            for f in parquet_files(self.table_path(rnd, name))
+        )
 
     def read_table(self, spark: SparkSession, rnd: int, name: str) -> DataFrame:
-        return spark.read.parquet(self.table_path(rnd, name))
+        path = self.table_path(rnd, name)
+        if name == "frontier":  # every round reads its input frontier
+            return read_declared(spark, FRONTIER_SCHEMA, path)
+        return spark.read.parquet(path)
 
     def _round_paths(self, name: str, upto_round: int) -> list[str]:
         if name in self._VIRTUAL:
@@ -123,9 +187,9 @@ class CheckpointStore:
         if not paths:
             return None
         return (
-            spark.read.parquet(*paths)
+            read_declared(spark, self._SEEN_READ_SCHEMA, *paths)
             .filter(self._SEEN_FILTER_COL)
-            .select("url_hash", "url", "first_round")
+            .select(*SEEN_SCHEMA.fieldNames())
         )
 
     def read_all(self, spark: SparkSession, name: str, upto_round: int) -> DataFrame | None:

@@ -17,11 +17,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from don_crawler_spark.functions.robots import compile_rules
-from don_crawler_spark.plans.checkpoint import CheckpointStore
+from don_crawler_spark.plans.checkpoint import (
+    SEEN_SCHEMA,
+    CheckpointStore,
+    read_declared,
+)
 from don_crawler_spark.plans.config import CrawlConfig
 from don_crawler_spark.plans.round import frontier_from_seeds, run_round
-
-SEEN_SCHEMA = "url_hash long, url string, first_round int"
+from don_crawler_spark.sources.synth import CORPUS_SCHEMAS
 
 
 @dataclass
@@ -42,16 +45,19 @@ def load_corpus(
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """Read a corpus directory once per crawl -> ``(pages, hosts, urls)``.
 
-    Every table is required: a missing one raises ``AnalysisException``
-    before any round runs. Each dimension is ONE aggregate over a union
-    (a join-built one cost polite CPU):
+    Every table is required and read with its declared schema
+    (``sources.synth.CORPUS_SCHEMAS``, no inference job): a missing
+    table raises ``AnalysisException`` and a missing column
+    ``ValueError``, before any round runs (``read_declared``). Each
+    dimension is ONE aggregate over a union (a join-built one cost
+    polite CPU):
     ``hosts(host, rules, crawl_delay_ms, max_per_round, not_before_ts)``
     from ``robots ∪ host_budgets``, ``urls(url, fail_rounds, target)``
     from ``transient ∪ redirects``.
     """
 
     def read(table: str) -> DataFrame:
-        return spark.read.parquet(f"{corpus_dir}/{table}.parquet")
+        return read_corpus_table(spark, corpus_dir, table)
 
     hosts = compile_rules(
         read("robots").unionByName(
@@ -71,6 +77,15 @@ def load_corpus(
         )
     )
     return read("pages"), hosts, urls
+
+
+def read_corpus_table(spark: SparkSession, corpus_dir: str, table: str) -> DataFrame:
+    """One corpus table, read with its declared ``CORPUS_SCHEMAS`` entry
+    (naive timestamps read as ``timestamp_ntz``, as Spark infers them)."""
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    schema = from_arrow_schema(CORPUS_SCHEMAS[table], prefer_timestamp_ntz=True)
+    return read_declared(spark, schema, f"{corpus_dir}/{table}.parquet")
 
 
 def run_crawl(
@@ -109,8 +124,9 @@ def run_crawl(
                 )
             )
         else:
-            seeds = spark.read.parquet(f"{corpus_dir}/seeds.parquet")
-            frontier = frontier_from_seeds(seeds)
+            frontier = frontier_from_seeds(
+                read_corpus_table(spark, corpus_dir, "seeds")
+            )
         # round 0 checkpoint: the seeded frontier (so round 1 is replayable)
         store.write_table(frontier, 0, "frontier")
         store.commit_round(0, {"seeded": True})

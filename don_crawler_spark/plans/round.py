@@ -44,6 +44,13 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    IntegerType,
+    LongType,
+    StringType,
+    StructField,
+    StructType,
+)
 
 from don_crawler_spark.functions import native_bloom
 from don_crawler_spark.functions.extract import (
@@ -58,7 +65,20 @@ from don_crawler_spark.functions.urls import (
 )
 from don_crawler_spark.plans.config import CrawlConfig
 
-FRONTIER_COLS = ["url_hash", "url", "host", "path", "depth", "src_url", "attempts"]
+# the frontier checkpoint's schema: every round writes it, and
+# CheckpointStore.read_table reads it back with it (no inference job)
+FRONTIER_SCHEMA = StructType(
+    [
+        StructField("url_hash", LongType()),
+        StructField("url", StringType()),
+        StructField("host", StringType()),
+        StructField("path", StringType()),
+        StructField("depth", IntegerType()),
+        StructField("src_url", StringType()),
+        StructField("attempts", IntegerType()),
+    ]
+)
+FRONTIER_COLS = FRONTIER_SCHEMA.fieldNames()
 
 # sub-partitioning of the within-level sequence rank: level 1 holds one
 # row per host, so a window partitioned by level alone would sort every
@@ -156,9 +176,14 @@ def _budget_expr(cfg: CrawlConfig, rnd: int):
     or 0 while the host backs off (not_before_ts > round start) — MUST be
     the same arithmetic as CrawlConfig.host_budget. A host missing from
     the host dimension reads null for all three inputs, so it gets the
-    default delay and cap and no back-off."""
-    delay = F.coalesce(F.col("crawl_delay_ms"), F.lit(cfg.default_crawl_delay_ms))
-    cap = F.coalesce(F.col("max_per_round"), F.lit(cfg.default_max_per_round))
+    default delay and cap and no back-off; a delay or cap of 0 also
+    means "use the default", as it does there."""
+
+    def or_default(col: str, default: int):
+        return F.coalesce(F.nullif(F.col(col), F.lit(0)), F.lit(default))
+
+    delay = or_default("crawl_delay_ms", cfg.default_crawl_delay_ms)
+    cap = or_default("max_per_round", cfg.default_max_per_round)
     return F.when(
         F.col("not_before_ts") > F.lit(cfg.round_ts(rnd)), F.lit(0).cast("long")
     ).otherwise(

@@ -189,6 +189,25 @@ def get_spark(
         # the sort writer ANYWAY — this aligns local behavior with the
         # at-scale code path instead of tuning for the sandbox.
         .config("spark.shuffle.sort.bypassMergeThreshold", "0")
+        # GENERATED-CLASS CACHE above one crawl round's classes. Every
+        # round runs the same plan shape, so a round should reuse the
+        # classes an earlier round compiled. Counted with CodegenMetrics
+        # on the 3k-page polite crawl (seed 801, 4 cores, Spark 4.1.2): a
+        # round run in a fresh JVM compiles 130 distinct classes, 160
+        # with the seed round.
+        # That is more than the default LRU's 100 entries, so a round
+        # evicted its own classes before the next one asked for them: a
+        # byte-identical repeat of round 2 missed 119-122 of its classes
+        # (Janino compile, then JIT, again); with this cache it misses
+        # 2, both the metrics aggregate's final stage, which inlines the
+        # round's wall_ms as a literal. A new round adds 10-21 classes
+        # (its round number and round_ts are inlined literals too).
+        # 1000 entries hold a round's classes plus dozens of rounds'
+        # literal classes; a class is ~2.3 KB of bytecode on average
+        # (13.5 KB max), so a full cache is a few MB. It is a plan-shape
+        # constant like the settings above, not a host-tuned one.
+        # Static conf: the JVM reads it once.
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
     )
     if executors is not None:
         builder = builder.config("spark.executor.memory", f"{executor_mem_mb}m")

@@ -1,7 +1,8 @@
 """Deterministic synthetic crawl corpus (the sandbox's "web").
 
 Produces the engine-side input tables per FIXTURES.md §B, exactly matching
-BASELINE.json's input_hint shape for pages:
+BASELINE.json's input_hint shape for pages; ``CORPUS_SCHEMAS`` declares
+each table's columns and types:
 
   pages(url string, warc_ts timestamp, html binary, text string, lang string)
   seeds(publisher_id, publisher_name, org_url, repo_urls, organisation_url)
@@ -42,6 +43,56 @@ WORDS = (
 ).split()
 
 LANGS = ["nl", "en", "de", "fr"]
+
+# Each corpus table's schema, declared once: ``generate_corpus`` writes
+# the tables with it and ``plans/driver.py::load_corpus`` reads them with
+# it, so reading a corpus runs no schema-inference job. Timestamps are
+# naive (UTC) microseconds, which Spark reads as ``timestamp_ntz``.
+CORPUS_SCHEMAS = {
+    "pages": pa.schema(
+        [
+            ("url", pa.string()),
+            ("warc_ts", pa.timestamp("us")),
+            ("html", pa.binary()),
+            ("text", pa.string()),
+            ("lang", pa.string()),
+        ]
+    ),
+    "seeds": pa.schema(
+        [
+            ("publisher_id", pa.string()),
+            ("publisher_name", pa.string()),
+            ("org_url", pa.string()),
+            ("repo_urls", pa.list_(pa.string())),
+            ("organisation_url", pa.string()),
+        ]
+    ),
+    "robots": pa.schema(
+        [("host", pa.string()), ("path_prefix", pa.string()), ("allow", pa.bool_())]
+    ),
+    "host_budgets": pa.schema(
+        [
+            ("host", pa.string()),
+            ("crawl_delay_ms", pa.int64()),
+            ("max_per_round", pa.int32()),
+            ("not_before_ts", pa.timestamp("us")),
+        ]
+    ),
+    "transient": pa.schema([("url", pa.string()), ("fail_rounds", pa.int32())]),
+    "redirects": pa.schema([("url", pa.string()), ("target", pa.string())]),
+}
+
+CORPUS_TABLES = tuple(f"{t}.parquet" for t in CORPUS_SCHEMAS)
+
+
+def write_corpus_rows(out_dir: str, table: str, rows: list[tuple]) -> str:
+    """Write ``rows`` (tuples in ``CORPUS_SCHEMAS[table]`` column order)
+    as ``{out_dir}/{table}.parquet``; returns the path."""
+    schema = CORPUS_SCHEMAS[table]
+    cols = [[r[k] for r in rows] for k in range(len(schema))]
+    path = os.path.join(out_dir, f"{table}.parquet")
+    pq.write_table(pa.table(dict(zip(schema.names, cols)), schema=schema), path)
+    return path
 
 
 def _hosts(rng: random.Random, n_hosts: int) -> list[str]:
@@ -261,13 +312,8 @@ def generate_corpus(
     paths: dict[str, str] = {}
 
     pages_tbl = pa.table(
-        {
-            "url": pa.array(urls, pa.string()),
-            "warc_ts": pa.array(ts, pa.timestamp("us")),
-            "html": pa.array(htmls, pa.binary()),
-            "text": pa.array(texts, pa.string()),
-            "lang": pa.array(langs, pa.string()),
-        }
+        {"url": urls, "warc_ts": ts, "html": htmls, "text": texts, "lang": langs},
+        schema=CORPUS_SCHEMAS["pages"],
     )
     # MULTI-FILE dataset, not one fat file: Spark task reads of a single
     # local parquet file serialize on the shared input stream (measured:
@@ -293,80 +339,24 @@ def generate_corpus(
         )
     paths["pages"] = pages_dir
 
-    seeds_tbl = pa.table(
-        {
-            "publisher_id": pa.array([r[0] for r in seed_rows], pa.string()),
-            "publisher_name": pa.array([r[1] for r in seed_rows], pa.string()),
-            "org_url": pa.array([r[2] for r in seed_rows], pa.string()),
-            "repo_urls": pa.array([r[3] for r in seed_rows], pa.list_(pa.string())),
-            "organisation_url": pa.array([r[4] for r in seed_rows], pa.string()),
-        }
-    )
-    paths["seeds"] = os.path.join(out_dir, "seeds.parquet")
-    pq.write_table(seeds_tbl, paths["seeds"])
-
-    robots_tbl = pa.table(
-        {
-            "host": pa.array([r[0] for r in robots_rows], pa.string()),
-            "path_prefix": pa.array([r[1] for r in robots_rows], pa.string()),
-            "allow": pa.array([r[2] for r in robots_rows], pa.bool_()),
-        }
-    )
-    paths["robots"] = os.path.join(out_dir, "robots.parquet")
-    pq.write_table(robots_tbl, paths["robots"])
-
-    budgets_tbl = pa.table(
-        {
-            "host": pa.array([r[0] for r in budget_rows], pa.string()),
-            "crawl_delay_ms": pa.array([r[1] for r in budget_rows], pa.int64()),
-            "max_per_round": pa.array([r[2] for r in budget_rows], pa.int32()),
-            "not_before_ts": pa.array(
-                [r[3] for r in budget_rows], pa.timestamp("us")
-            ),
-        }
-    )
-    paths["host_budgets"] = os.path.join(out_dir, "host_budgets.parquet")
-    pq.write_table(budgets_tbl, paths["host_budgets"])
+    for table, rows in (
+        ("seeds", seed_rows),
+        ("robots", robots_rows),
+        ("host_budgets", budget_rows),
+    ):
+        paths[table] = write_corpus_rows(out_dir, table, rows)
 
     # transient failures: these URLs return 503 while rnd <= fail_rounds
     # (the corpus-side stand-in for rate-limit/5xx responses the reference
     # retries — scanner/gitlab.go:63-113, crawler/crawler.go:375-447)
-    t_urls: list[str] = []
-    t_rounds: list[int] = []
-    for u in urls:
-        if rng.random() < transient_rate:
-            t_urls.append(u)
-            t_rounds.append(rng.randint(1, 3))
-    transient_tbl = pa.table(
-        {
-            "url": pa.array(t_urls, pa.string()),
-            "fail_rounds": pa.array(t_rounds, pa.int32()),
-        }
-    )
-    paths["transient"] = os.path.join(out_dir, "transient.parquet")
-    pq.write_table(transient_tbl, paths["transient"])
-
+    transient_rows = [
+        (u, rng.randint(1, 3)) for u in urls if rng.random() < transient_rate
+    ]
+    paths["transient"] = write_corpus_rows(out_dir, "transient", transient_rows)
     # 301 aliases (possibly empty)
-    redirects_tbl = pa.table(
-        {
-            "url": pa.array([r[0] for r in redirect_rows], pa.string()),
-            "target": pa.array([r[1] for r in redirect_rows], pa.string()),
-        }
-    )
-    paths["redirects"] = os.path.join(out_dir, "redirects.parquet")
-    pq.write_table(redirects_tbl, paths["redirects"])
+    paths["redirects"] = write_corpus_rows(out_dir, "redirects", redirect_rows)
 
     return paths
-
-
-CORPUS_TABLES = (
-    "pages.parquet",
-    "seeds.parquet",
-    "robots.parquet",
-    "host_budgets.parquet",
-    "transient.parquet",
-    "redirects.parquet",
-)
 
 
 def _corpus_complete(out: str) -> bool:

@@ -60,6 +60,36 @@ def test_missing_corpus_table_fails_before_any_round(spark, tmp_path) -> None:
     ]
 
 
+def _write_hand_built_corpus(corpus, robots: dict, budgets: dict) -> None:
+    """A corpus of the given robots rules and host budgets (host ->
+    (crawl_delay_ms, max_per_round, not_before_ts)) and no page rows:
+    every selected URL fetches as a 404 with no links, so the next
+    frontier holds exactly the deferred rows."""
+    from don_crawler_spark.sources.synth import write_corpus_rows
+
+    corpus.mkdir()
+    tables = {
+        "robots": [(h, p, a) for h in robots for p, a in robots[h]],
+        "host_budgets": [(h, *b) for h, b in budgets.items()],
+        "pages": [],
+        "transient": [],
+        "redirects": [],
+    }
+    for name, rows in tables.items():
+        write_corpus_rows(str(corpus), name, rows)
+
+
+def _frontier(spark, hosts, paths):
+    """Depth-0 frontier rows of every (host, path); -> (rows, DataFrame)."""
+    from don_crawler_spark.plans.round import FRONTIER_SCHEMA
+
+    rows = [
+        (i, f"https://{h}{p}", h, p, 0, "", 0)
+        for i, (h, p) in enumerate((h, p) for h in hosts for p in paths)
+    ]
+    return rows, spark.createDataFrame(rows, FRONTIER_SCHEMA)
+
+
 def test_round_handles_hosts_missing_from_either_table(spark, tmp_path) -> None:
     """Hosts with robots rules only, budgets only, neither, and both (in
     back-off): each frontier URL's robots verdict equals the oracle
@@ -67,13 +97,10 @@ def test_round_handles_hosts_missing_from_either_table(spark, tmp_path) -> None:
     min(allowed candidates, CrawlConfig.host_budget(...))."""
     import datetime as dt
 
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
     from don_crawler_spark.functions.robots import robots_allowed_py
     from don_crawler_spark.plans.config import CrawlConfig
     from don_crawler_spark.plans.driver import _empty_seen, load_corpus
-    from don_crawler_spark.plans.round import FRONTIER_COLS, run_round
+    from don_crawler_spark.plans.round import run_round
 
     cfg = CrawlConfig(default_max_per_round=3)
     rnd = 1
@@ -89,50 +116,12 @@ def test_round_handles_hosts_missing_from_either_table(spark, tmp_path) -> None:
         both: (1_000, 5, cfg.round_ts(rnd) + dt.timedelta(hours=1)),
     }
     corpus = tmp_path / "c"
-    corpus.mkdir()
-
-    def write(name, cols):
-        pq.write_table(pa.table(cols), str(corpus / f"{name}.parquet"))
-
-    write("robots", {
-        "host": pa.array([h for h in robots for _ in robots[h]], pa.string()),
-        "path_prefix": pa.array(
-            [p for h in robots for p, _ in robots[h]], pa.string()),
-        "allow": pa.array([a for h in robots for _, a in robots[h]], pa.bool_()),
-    })
-    write("host_budgets", {
-        "host": pa.array(list(budgets), pa.string()),
-        "crawl_delay_ms": pa.array([b[0] for b in budgets.values()], pa.int64()),
-        "max_per_round": pa.array([b[1] for b in budgets.values()], pa.int32()),
-        "not_before_ts": pa.array(
-            [b[2] for b in budgets.values()], pa.timestamp("us")),
-    })
-    # no page rows: every selected URL fetches as a 404 with no links, so
-    # the next frontier holds exactly the deferred rows
-    write("pages", {
-        "url": pa.array([], pa.string()),
-        "warc_ts": pa.array([], pa.timestamp("us")),
-        "html": pa.array([], pa.binary()),
-        "text": pa.array([], pa.string()),
-        "lang": pa.array([], pa.string()),
-    })
-    write("transient", {"url": pa.array([], pa.string()),
-                        "fail_rounds": pa.array([], pa.int32())})
-    write("redirects", {"url": pa.array([], pa.string()),
-                        "target": pa.array([], pa.string())})
+    _write_hand_built_corpus(corpus, robots, budgets)
 
     paths = ["/a", "/b", "/c", "/d", "/private/p", "/private/ok1", "/x1"]
-    rows = [
-        (i, f"https://{h}{p}", h, p, 0, "", 0)
-        for i, (h, p) in enumerate(
-            (h, p) for h in (rules_only, budgets_only, neither, both)
-            for p in paths
-        )
-    ]
-    frontier = spark.createDataFrame(
-        rows, "url_hash long, url string, host string, path string, "
-              "depth int, src_url string, attempts int",
-    ).select(FRONTIER_COLS)
+    rows, frontier = _frontier(
+        spark, (rules_only, budgets_only, neither, both), paths
+    )
     out = run_round(cfg, rnd, frontier, _empty_seen(spark),
                     *load_corpus(spark, str(corpus)), len(rows), persist=False)
     fetched = out.fetched_full.select("url", "host", "status").collect()
@@ -151,3 +140,146 @@ def test_round_handles_hosts_missing_from_either_table(spark, tmp_path) -> None:
         budget = cfg.host_budget(*budgets.get(host, (None, None, None)), rnd)
         n = sum(r["host"] == host for r in fetched)
         assert n == min(allowed, budget), (host, n, allowed, budget)
+
+
+def test_zero_delay_or_cap_means_default(spark, tmp_path) -> None:
+    """A crawl_delay_ms or max_per_round of 0 reads as "use the default"
+    in the engine, as in CrawlConfig.host_budget: delay 0 with cap 10
+    selects 10 (not a division by zero), delay 1000 with cap 0 selects
+    min(default cap 100, 60000 // 1000) = 60 (not 0)."""
+    from don_crawler_spark.plans.config import CrawlConfig
+    from don_crawler_spark.plans.driver import _empty_seen, load_corpus
+    from don_crawler_spark.plans.round import run_round
+
+    cfg = CrawlConfig()
+    budgets = {
+        "zero-delay.example": (0, 10, None),
+        "zero-cap.example": (1_000, 0, None),
+    }
+    corpus = tmp_path / "c"
+    _write_hand_built_corpus(corpus, {}, budgets)
+    rows, frontier = _frontier(spark, budgets, [f"/p{i}" for i in range(80)])
+    out = run_round(cfg, 1, frontier, _empty_seen(spark),
+                    *load_corpus(spark, str(corpus)), len(rows), persist=False)
+    fetched = out.fetched_full.select("host").collect()
+    got = {h: sum(r["host"] == h for r in fetched) for h in budgets}
+    want = {h: cfg.host_budget(*b, 1) for h, b in budgets.items()}
+    assert want == {"zero-delay.example": 10, "zero-cap.example": 60}
+    assert got == want
+
+
+def _manifests(ck: str) -> list[str]:
+    import os
+
+    return sorted(
+        f for f in os.listdir(ck)
+        if f.startswith("manifest_") and f.endswith(".json")
+    )
+
+
+def _crawl_base(spark, tmp_path, **corpus_kw) -> tuple[str, str]:
+    """A small synth corpus and a checkpoint committed through round 1."""
+    from don_crawler_spark.plans.config import CrawlConfig
+    from don_crawler_spark.plans.driver import run_crawl
+    from don_crawler_spark.sources.synth import generate_corpus
+
+    corpus = str(tmp_path / "c")
+    generate_corpus(corpus, n_pages=200, n_hosts=5, seed=13, n_publishers=3,
+                    redirect_rate=0.05, **corpus_kw)
+    base = str(tmp_path / "base")
+    run_crawl(spark, corpus, base, CrawlConfig(max_rounds=1))
+    return corpus, base
+
+
+def test_repeated_round_reuses_compiled_code(spark, tmp_path) -> None:
+    """Every round runs the same plan shape, so a repeat of a round
+    compiles only the classes that inline a per-crawl literal: the
+    metrics aggregate's final stage, which carries the round's
+    ``wall_ms`` (compiled twice by the metrics write). With the default
+    100-entry codegen cache, smaller than one round's ~130 classes, the
+    repeat recompiles about a hundred classes."""
+    import shutil
+
+    from don_crawler_spark.plans.config import CrawlConfig
+    from don_crawler_spark.plans.driver import run_crawl
+
+    corpus, base = _crawl_base(spark, tmp_path)
+    codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+
+    def compiles() -> int:
+        return codegen.METRIC_COMPILATION_TIME().getCount()
+
+    def resume_round_2(ck: str) -> int:
+        shutil.copytree(base, ck)
+        before = compiles()
+        assert run_crawl(spark, corpus, ck, CrawlConfig(max_rounds=2)).rounds == 2
+        return compiles() - before
+
+    resume_round_2(str(tmp_path / "first"))
+    wall_ms_classes = 2
+    assert resume_round_2(str(tmp_path / "repeat")) <= wall_ms_classes
+
+
+def test_crawl_reads_run_no_job(spark, tmp_path) -> None:
+    """Loading the corpus and reading a committed round's frontier and
+    seen set declare every schema: no Spark job (no schema inference)."""
+    from don_crawler_spark.plans.checkpoint import CheckpointStore
+    from don_crawler_spark.plans.driver import load_corpus
+
+    corpus, base = _crawl_base(spark, tmp_path)
+    store = CheckpointStore(base)
+    scheduler = spark.sparkContext._jsc.sc().dagScheduler()
+    job0 = scheduler.nextJobId()
+    load_corpus(spark, corpus)
+    store.read_table(spark, 1, "frontier")
+    store.read_seen(spark, 1)
+    assert scheduler.nextJobId() == job0
+
+
+def test_corpus_table_missing_a_column_fails_before_any_round(
+    spark, tmp_path
+) -> None:
+    """A declared schema alone would read a dropped column as null; the
+    footer check raises instead, and the crawl commits nothing."""
+    import pyarrow.parquet as pq
+
+    from don_crawler_spark.plans.driver import run_crawl
+    from don_crawler_spark.sources.synth import generate_corpus
+
+    corpus = str(tmp_path / "c")
+    generate_corpus(corpus, n_pages=60, n_hosts=3, seed=11, n_publishers=2)
+    path = f"{corpus}/host_budgets.parquet"
+    pq.write_table(pq.read_table(path).drop_columns(["max_per_round"]), path)
+    ck = str(tmp_path / "ck")
+    with pytest.raises(ValueError, match="max_per_round"):
+        run_crawl(spark, corpus, ck)
+    assert _manifests(ck) == []
+
+
+def test_mistyped_frontier_column_fails_before_the_round_commits(
+    spark, tmp_path
+) -> None:
+    """A frontier checkpoint whose ``depth`` is a string fails the round
+    that reads it, and the round commits no manifest."""
+    import os
+    import shutil
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from don_crawler_spark.plans.checkpoint import CheckpointStore
+    from don_crawler_spark.plans.config import CrawlConfig
+    from don_crawler_spark.plans.driver import run_crawl
+
+    corpus, base = _crawl_base(spark, tmp_path)
+    path = CheckpointStore(base).table_path(1, "frontier")
+    table = pq.read_table(path)
+    k = table.schema.get_field_index("depth")
+    mistyped = table.set_column(k, "depth", table["depth"].cast(pa.string()))
+    shutil.rmtree(path)  # the part files and their .crc checksums
+    os.makedirs(path)
+    pq.write_table(mistyped, os.path.join(path, "part-00000.parquet"))
+    before = _manifests(base)
+    with pytest.raises(Exception, match=r"DATA_TYPE_MISMATCH.*column \[depth\]"):
+        run_crawl(spark, corpus, base, CrawlConfig(max_rounds=2))
+    assert _manifests(base) == before
