@@ -707,12 +707,13 @@ def x7_canon(spark, sf_dir):
     """X7 — URL canonicalization, the key of the whole engine (the scale
     substitute for the reference's clone-URL identity + per-key mutex,
     crawler/crawler.go:620-632). Six deterministic URL shapes per orders
-    row exercise BOTH regimes of the hybrid kernel: the JVM fast path
-    (m=0 trailing slash, m=5 root path) and the Python fallback (m=1
-    mixed-case host + default port, m=2 query sort + fragment drop, m=3
-    dot segments kept verbatim without a base, m=4 credential strip).
-    The oracle constructs the expected canonical form independently per
-    shape — it shares no code with either kernel."""
+    row exercise BOTH arms of the kernel's CASE column (Spark SQL only,
+    no Python worker): the fast path (m=0 trailing slash, m=5 root path)
+    and the port of canonicalize_url in the ELSE arm (m=1 mixed-case
+    host + default port, m=2 query sort + fragment drop, m=3 dot
+    segments kept verbatim without a base, m=4 credential strip). The
+    oracle constructs the expected canonical form independently per
+    shape — it shares no code with the kernel."""
     from don_crawler_spark.functions.urls import add_canonical_url_abs
 
     o = load(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")

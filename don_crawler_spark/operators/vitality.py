@@ -74,9 +74,9 @@ GIT_EPOCH = dt.datetime(2005, 1, 1, 1, 0, 0)  # git/repo_activity.go:228
 
 
 def ranges_df(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(
-        RANGES_DATA, "name string, min double, max double, points double"
-    )
+    """The bands as a local relation planned in the JVM (no Python RDD)."""
+    rows = ", ".join(f"('{n}', {lo!r}D, {hi!r}D, {pts!r}D)" for n, lo, hi, pts in RANGES_DATA)
+    return spark.sql(f"SELECT * FROM VALUES {rows} AS bands(name, min, max, points)")
 
 
 def range_points(

@@ -37,7 +37,14 @@ class CrawlSummary:
 
 
 def _empty_seen(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame([], SEEN_SCHEMA)
+    """A seen set of no rows, planned in the JVM (``createDataFrame``
+    would scan a Python RDD and start a Python worker)."""
+    return spark.range(0).selectExpr(
+        *(
+            f"CAST(NULL AS {f.dataType.simpleString()}) AS {f.name}"
+            for f in SEEN_SCHEMA.fields
+        )
+    )
 
 
 def load_corpus(

@@ -12,7 +12,9 @@ Kept deliberately naive (dicts, lists, one thread) so it is obviously
 correct and cannot share bugs with the DataFrame implementation beyond the
 shared kernels (canonicalize_url, xxhash64, description_from_readme,
 robots longest-prefix match) — which is precisely the surface the
-byte-exactness invariant covers.
+byte-exactness invariant covers. A URL canonicalize_url rejects (a
+malformed seed, link or redirect target; canonical_link's None) is
+skipped, as the engine drops its NULL canonical URL.
 """
 
 from __future__ import annotations
@@ -24,7 +26,7 @@ import pyarrow.parquet as pq
 from don_crawler_spark.functions.extract import description_from_readme, parse_links_py
 from don_crawler_spark.functions.hashing import xxhash64_str
 from don_crawler_spark.functions.robots import robots_allowed_py
-from don_crawler_spark.functions.urls import canonicalize_url, url_host, url_path
+from don_crawler_spark.functions.urls import canonical_link, url_host, url_path
 from don_crawler_spark.plans.config import CrawlConfig
 from don_crawler_spark.plans.round import _SEQ_HOST_SALTS
 
@@ -77,15 +79,17 @@ def crawl_oracle(corpus_dir: str, config: CrawlConfig | None = None) -> OracleRe
     frontier: dict[str, tuple[int, str]] = {}
     attempts: dict[str, int] = {}
 
-    def add_frontier(url: str, depth: int, src: str) -> None:
+    def add_frontier(url: str | None, depth: int, src: str) -> None:
+        if url is None:
+            return
         cur = frontier.get(url)
         if cur is None or (depth, src) < cur:
             frontier[url] = (depth, src)
 
     for org_url, repo_urls in zip(seeds_tbl["org_url"], seeds_tbl["repo_urls"]):
-        add_frontier(canonicalize_url(org_url), 0, "")
+        add_frontier(canonical_link(org_url), 0, "")
         for ru in repo_urls or []:
-            add_frontier(canonicalize_url(ru), 0, "")
+            add_frontier(canonical_link(ru), 0, "")
 
     res = OracleResult()
 
@@ -155,7 +159,7 @@ def crawl_oracle(corpus_dir: str, config: CrawlConfig | None = None) -> OracleRe
                 fetched_depth = depth_of[url]
                 if fetched_depth + 1 <= cfg.max_depth:
                     n_links += 1
-                    canon = canonicalize_url(redirects[url], base=url)
+                    canon = canonical_link(redirects[url], base=url)
                     if canon not in res.seen:
                         add_frontier(canon, fetched_depth + 1, url)
                 continue
@@ -180,7 +184,7 @@ def crawl_oracle(corpus_dir: str, config: CrawlConfig | None = None) -> OracleRe
             fetched_depth = depth_of[url]
             if fetched_depth + 1 <= cfg.max_depth:
                 for href in parse_links_py(html):
-                    canon = canonicalize_url(href, base=url)
+                    canon = canonical_link(href, base=url)
                     n_links += 1
                     if canon not in res.seen:
                         add_frontier(canon, fetched_depth + 1, url)

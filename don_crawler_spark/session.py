@@ -111,8 +111,9 @@ def get_spark(
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         # AQE: runtime coalescing + skew-join splitting. At crawl scale a
         # heavy host (30%+ of the frontier) would otherwise serialize one
-        # shuffle partition; AQE splits it, and our host-salting (see
-        # plans/round.py) handles the politeness-partitioning path.
+        # shuffle partition of a join; AQE splits it. The per-host budget
+        # window is not split: it ranks a host's candidates in one task
+        # (see the Scale notes in plans/round.py).
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
@@ -150,8 +151,8 @@ def get_spark(
         )
         # broadcastTimeout: the 300s default is a hang detector, not a
         # budget — but a broadcast value may sit at the end of a long
-        # compute pipeline (the crawl's selected-set prune builds the
-        # whole frontier selection before broadcasting its keys). On the
+        # compute pipeline (a round's sequence offsets aggregate the
+        # whole budget-ranked selection before they broadcast). On the
         # 2-core scaling-bench executors (executors != None) a legitimate
         # build can take a long time -> 3600; normal sessions get 1200:
         # still a working hang detector (r3 ADVICE), but with headroom

@@ -374,3 +374,56 @@ def test_redirect_rate_zero_leaves_corpus_identical(tmp_path_factory) -> None:
         tb = pq_.read_table(f"{b}/{tbl}")
         assert ta.equals(tb), tbl
     assert pq_.read_table(f"{a}/redirects.parquet").num_rows == 0
+
+
+# --- malformed links ----------------------------------------------------------
+
+
+def test_malformed_links_are_dropped_not_fatal(spark, tmp_path) -> None:
+    """canonicalize_url raises ValueError on these three URLs (an
+    unbalanced bracket, a bracketed IPv4 address, a netloc whose NFKC
+    form holds '/'). As hrefs on fetched pages, as a seed and as a
+    redirect target they are dropped: the crawl runs two rounds and
+    its trace and seen set equal the oracle's."""
+    import datetime as dt
+
+    from don_crawler_spark.functions.urls import canonical_link
+    from don_crawler_spark.plans.checkpoint import CheckpointStore
+    from don_crawler_spark.plans.driver import run_crawl
+    from don_crawler_spark.sources.synth import write_corpus_rows
+
+    malformed = ["http://[x", "http://[1.2.3.4]/", "https://a／b/x"]
+    assert [canonical_link(u) for u in malformed] == [None] * 3
+
+    def page(url, hrefs):
+        html = "<html><body><p>page</p>" + "".join(
+            f'<a href="{h}">l</a>' for h in hrefs) + "</body></html>"
+        return (url, dt.datetime(2024, 1, 1), html.encode(), "page", "en")
+
+    corpus = tmp_path / "corpus"
+    corpus.mkdir()
+    tables = {
+        "pages": [
+            page("https://a.example", ["/p1", "/old", "https://b.example/q", *malformed]),
+            page("https://a.example/p1", ["/p2", malformed[0]]),
+            page("https://a.example/p2", []),
+            page("https://b.example/q", [malformed[2], "/r"]),
+        ],
+        "seeds": [("p", "P", "https://a.example/", ["https://a.example/p1", malformed[1]], "")],
+        "robots": [],
+        "host_budgets": [],
+        "transient": [],
+        "redirects": [("https://a.example/old", malformed[2])],
+    }
+    for name, rows in tables.items():
+        write_corpus_rows(str(corpus), name, rows)
+
+    cfg = CrawlConfig(max_rounds=2)
+    oracle = crawl_oracle(str(corpus), cfg)
+    assert oracle.rounds == 2
+    ckpt = str(tmp_path / "ckpt")
+    summary = run_crawl(spark, str(corpus), ckpt, cfg)
+    assert summary.rounds == 2
+    assert _engine_trace(spark, ckpt, 2) == sorted(oracle.trace)
+    seen = CheckpointStore(ckpt).read_seen(spark, 2)
+    assert {r["url"]: (r["url_hash"], r["first_round"]) for r in seen.collect()} == oracle.seen

@@ -25,6 +25,13 @@ def _optimized(df) -> str:
     return df._jdf.queryExecution().optimizedPlan().toString()
 
 
+def _python_nodes(plan: str) -> list[str]:
+    """The lines of a physical plan that run Python (a UDF, a pandas or
+    Arrow map) or scan a Python RDD (``createDataFrame``)."""
+    nodes = ("EvalPython", "InPandas", "InArrow", "ExistingRDD")
+    return [line for line in plan.splitlines() if any(n in line for n in nodes)]
+
+
 def test_j1_broadcasts_the_dimension(spark) -> None:
     import __spark_entry__ as em
 
@@ -163,14 +170,14 @@ def test_no_python_udf_in_native_queries(spark) -> None:
 
     for name in ["t5_budget_rank", "j1_broadcast_enrichment", "text_fingerprint",
                  "text_quality_score", "a7_vitality_index"]:
-        plan = _plan(em.queries()[name](spark, SF))
-        assert "EvalPython" not in plan, name
+        assert _python_nodes(_plan(em.queries()[name](spark, SF))) == [], name
 
 
 def _round_on_fixture(spark, tmp_path, cfg, persist: bool):
     """Round 1 over the 150-page / 6-host corpus, against a one-row seen
-    set (an empty one would let Catalyst drop the anti-join)."""
-    from don_crawler_spark.plans.driver import SEEN_SCHEMA, load_corpus
+    set (an empty one would let Catalyst drop the anti-join), built in
+    the JVM like every input of a crawl."""
+    from don_crawler_spark.plans.driver import load_corpus
     from don_crawler_spark.plans.round import frontier_from_seeds, run_round
     from don_crawler_spark.sources.synth import generate_corpus
 
@@ -181,7 +188,9 @@ def _round_on_fixture(spark, tmp_path, cfg, persist: bool):
         cfg,
         1,
         frontier,
-        spark.createDataFrame([(0, "https://elsewhere.example/", 0)], SEEN_SCHEMA),
+        spark.range(1).selectExpr(
+            "0L AS url_hash", "'https://elsewhere.example/' AS url", "0 AS first_round"
+        ),
         *load_corpus(spark, corpus),
         frontier.count(),
         persist=persist,
@@ -189,20 +198,17 @@ def _round_on_fixture(spark, tmp_path, cfg, persist: bool):
 
 
 def test_enriched_round_plan_has_no_python_udf(spark, tmp_path) -> None:
-    """With enrich_fetched=True the page-processing DAG (extract + links
-    + simhash_v2 + quality stats) must be JVM-native (r2 finding: the v1
-    simhash pandas UDF sat on this path). The ONLY Python nodes allowed
-    anywhere in the round plan are the URL-canonicalization slow-path
-    fallbacks for rare complex shapes (functions/urls.py hybrid split) —
-    seeds feeding the frontier, and new-link resolution.
+    """With enrich_fetched=True the round DAG (extract + links +
+    simhash_v2 + quality stats + link canonicalization) holds no Python
+    node at all (r2 finding: the v1 simhash pandas UDF sat on this path).
 
     The round checks the seen set once: no anti-join on the way to
-    ``fetched_full``, exactly one (the new links against the updated
-    seen set) in the ``new_frontier`` DAG, and no Python cogroup (Bloom
-    probe) in either. The optimizer copies that one anti-join into each
-    canonicalization branch of the new links, so it is counted in the
-    analyzed plan. The seen set is non-empty, so Catalyst cannot drop an
-    anti-join against it as a join with an empty relation.
+    ``fetched_full`` and exactly one (the new links against the updated
+    seen set) in the ``new_frontier`` DAG, before and after the
+    optimizer (the new links are one branch, so it has no branch to
+    copy the anti-join into). The seen set is non-empty, so Catalyst
+    cannot drop an anti-join against it as a join with an empty
+    relation.
 
     The budget cut is one window per host: every ``row_number()`` window
     led by ``host`` in the analyzed ``fetched_full`` plan partitions by
@@ -215,15 +221,11 @@ def test_enriched_round_plan_has_no_python_udf(spark, tmp_path) -> None:
         spark, tmp_path, CrawlConfig(enrich_fetched=True), persist=False
     )
     for df in (out.fetched_full, out.new_frontier):
-        plan = _plan(df)
-        for line in plan.splitlines():
-            if "EvalPython" in line:
-                assert "canonicalize" in line, f"non-canonicalization UDF: {line}"
-        assert "simhash_udf" not in plan
-        assert "FlatMapCoGroupsInPandas" not in _optimized(df)
+        assert _python_nodes(_plan(df)) == []
     assert "LeftAnti" not in _optimized(out.fetched_full)
     analyzed = out.new_frontier._jdf.queryExecution().analyzed().toString()
     assert analyzed.count("LeftAnti") == 1
+    assert _optimized(out.new_frontier).count("LeftAnti") == 1
     host_windows = [
         re.sub(r"#\d+L?", "", spec).split(", ")
         for spec in re.findall(
@@ -234,6 +236,68 @@ def test_enriched_round_plan_has_no_python_udf(spark, tmp_path) -> None:
     host_windows = [spec for spec in host_windows if spec[0] == "host"]
     assert host_windows, "no per-host budget window in the plan"
     assert all(spec == ["host"] for spec in host_windows), host_windows
+
+
+def test_seed_frontier_and_empty_seen_run_no_python(spark, tmp_path) -> None:
+    """A crawl's first inputs, the seed frontier (canonicalized seeds)
+    and the empty seen set, are planned without a Python node."""
+    from don_crawler_spark.plans.driver import (
+        SEEN_SCHEMA,
+        _empty_seen,
+        read_corpus_table,
+    )
+    from don_crawler_spark.plans.round import frontier_from_seeds
+    from don_crawler_spark.sources.synth import generate_corpus
+
+    corpus = str(tmp_path / "c")
+    generate_corpus(corpus, n_pages=150, n_hosts=6, seed=21, n_publishers=3)
+    frontier = frontier_from_seeds(read_corpus_table(spark, corpus, "seeds"))
+    assert frontier.count() > 0
+    assert _python_nodes(_plan(frontier)) == []
+    assert _python_nodes(_plan(_empty_seen(spark))) == []
+    assert _empty_seen(spark).schema == SEEN_SCHEMA
+
+
+def test_crawl_starts_no_python_worker(tmp_path) -> None:
+    """A fresh session crawls two rounds of a 300-page corpus and no
+    Python worker factory exists afterwards (the JVM creates one for the
+    first job that needs a Python worker). The same probe then counts
+    the factory one Python RDD job creates, so it can see one."""
+    import os
+    import subprocess
+    import sys
+
+    script = """
+import sys
+from don_crawler_spark.plans.config import CrawlConfig
+from don_crawler_spark.plans.driver import run_crawl
+from don_crawler_spark.session import get_spark
+from don_crawler_spark.sources.synth import generate_corpus
+
+corpus, ckpt = sys.argv[1:]
+generate_corpus(corpus, n_pages=300, n_hosts=12, seed=42, n_publishers=4)
+spark = get_spark("no-python-worker", cpus=2, shuffle_partitions=4,
+                  extra_conf={"spark.driver.memory": "1g"})
+workers = spark._jvm.org.apache.spark.SparkEnv.get().pythonWorkers()
+summary = run_crawl(spark, corpus, ckpt, CrawlConfig(max_rounds=2))
+after_crawl = workers.size()
+spark.createDataFrame([(1,)], "x int").count()
+print("RESULT", summary.rounds, summary.urls_fetched, after_crawl, workers.size())
+spark.stop()
+"""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ, PYTHONPATH=os.pathsep.join(
+        [root, os.environ.get("PYTHONPATH", "")]))
+    proc = subprocess.run(
+        [sys.executable, "-c", script, str(tmp_path / "c"), str(tmp_path / "k")],
+        capture_output=True, text=True, timeout=600, env=env, cwd=str(tmp_path),
+    )
+    result = [ln for ln in proc.stdout.splitlines() if ln.startswith("RESULT")]
+    assert proc.returncode == 0 and result, proc.stderr[-3000:]
+    rounds, fetched, after_crawl, after_rdd_job = map(int, result[0].split()[1:])
+    assert rounds == 2 and fetched > 0
+    assert after_crawl == 0
+    assert after_rdd_job == 1
 
 
 def test_round_materializes_three_caches(spark, tmp_path) -> None:
@@ -416,7 +480,7 @@ def test_pq_plans_broadcast_and_stay_jvm(spark) -> None:
 
     for name in ["ann_pq_adc", "ann_ivf_pq"]:
         plan = _plan(em.queries()[name](spark, SF))
-        assert "EvalPython" not in plan, name
+        assert _python_nodes(plan) == [], name
         assert "Broadcast" in plan, name
         assert "SortMergeJoin" not in plan, name
         assert "WindowGroupLimit" in plan, name
