@@ -24,6 +24,7 @@ single spaces.
 
 from __future__ import annotations
 
+import functools
 import re
 
 import pandas as pd
@@ -266,16 +267,22 @@ def with_extracted_description(df, html: str = "html", out: str = "text",
 
     Internal columns are dropped before return.
     """
+    d_, p_, desc = _x1_columns(html, binary)
+    staged = df.select("*", d_.alias("__x1_d"), p_.alias("__x1_p"))
+    return staged.withColumn(out, desc).drop("__x1_d", "__x1_p")
+
+
+@functools.cache
+def _x1_columns(html: str, binary: bool):
+    """``with_extracted_description``'s Column trees: they read columns
+    by name only, so each (html, binary) builds them once per process."""
     s = html_string_col(F.col(html)) if binary else F.col(html)
     d_ = F.regexp_replace(s, "\r\n", "\n")
-    staged = df.withColumn("__x1_d", d_).withColumn(
-        # 1-based char position of the first line whose go-trim is ""
-        # (0 = no blank line). (?d): only \n terminates a line, see
-        # _GO_TRIM_ALL_LINES_RE.
-        "__x1_p",
-        F.regexp_instr(F.col("__x1_d"), F.lit(f"(?dm)^{_GO_WS_CLASS_NO_NL}*$")),
-    )
     d = F.col("__x1_d")
+    # 1-based char position of the first line whose go-trim is ""
+    # (0 = no blank line). (?d): only \n terminates a line, see
+    # _GO_TRIM_ALL_LINES_RE. A lateral alias: it reads __x1_d.
+    p_ = F.regexp_instr(d, F.lit(f"(?dm)^{_GO_WS_CLASS_NO_NL}*$"))
     p = F.col("__x1_p")
     count_nl = lambda c: (F.length(c) - F.length(F.translate(c, "\n", "")))
     n = count_nl(d) + 1  # total lines
@@ -295,7 +302,7 @@ def with_extracted_description(df, html: str = "html", out: str = "text",
             )
         )
     )
-    return staged.withColumn(out, desc).drop("__x1_d", "__x1_p")
+    return d_, p_, desc
 
 
 def links_native_col(html, *, binary: bool = True):

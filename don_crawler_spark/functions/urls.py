@@ -84,11 +84,12 @@ def canonical_link(url: str, base: str | None = None) -> str | None:
 
 
 def url_host(url: str) -> str:
-    """Host (no port) of an already-canonical URL."""
+    """Host (no port) of an already-canonical URL: a bracketed host up
+    to its ']', else the netloc without its last ':port'."""
     netloc = urlsplit(url).netloc
-    if ":" in netloc:
-        return netloc.rpartition(":")[0]
-    return netloc
+    if netloc.startswith("["):
+        return "".join(netloc.partition("]")[:2])
+    return netloc.rpartition(":")[0] if ":" in netloc else netloc
 
 
 def url_path(url: str) -> str:
@@ -405,16 +406,25 @@ def _urljoin(h: str, b: str) -> list[str]:
     ]
 
 
-def _apply(df: DataFrame, exprs: list[str]) -> DataFrame:
-    """``df`` plus the last of ``exprs``; the named intermediates
-    (``__cu_*``) are dropped."""
-    names = [e.rsplit(" AS ", 1)[1] for e in exprs[:-1]]
-    return df.selectExpr("*", *exprs).drop(*names)
+def _apply(df: DataFrame, exprs: list[str], drop_malformed: bool) -> DataFrame:
+    """``df`` plus the last of ``exprs``, the named intermediates
+    (``__cu_*``) dropped; with ``drop_malformed``, so are its NULL rows:
+    by exploding a 0- or 1-element array, as no predicate crosses a
+    generator (a Filter would be pushed below the kernel by inlining its
+    expressions, a tree that grows with every reference)."""
+    out = exprs[-1].rsplit(" AS ", 1)[1]
+    if drop_malformed:
+        out = f"explode(IF({out} IS NULL, array(), array({out}))) AS {out}"
+    keep = ["`" + c.replace("`", "``") + "`" for c in df.columns]
+    return df.selectExpr("*", *exprs).selectExpr(*keep, out)
 
 
-def add_canonical_url_abs(df: DataFrame, url: str, out: str) -> DataFrame:
+def add_canonical_url_abs(
+    df: DataFrame, url: str, out: str, *, drop_malformed: bool = False
+) -> DataFrame:
     """df + column ``out`` = canonical_link(url): canonicalize_url for
-    base-less URLs (seed lists, sitemaps), NULL where it raises."""
+    base-less URLs (seed lists, sitemaps), NULL (or no row, with
+    ``drop_malformed``) where it raises."""
     u = f"`{url}`"
     fast = f"coalesce({u} rlike r'^{_NO_DOTSEG}{_ABS_SHAPE}\\z', false)"
     return _apply(
@@ -426,12 +436,16 @@ def add_canonical_url_abs(df: DataFrame, url: str, out: str) -> DataFrame:
                 "__cu_fast", _fast_value(u, u), "__cu_u", "false", out
             ),
         ],
+        drop_malformed,
     )
 
 
-def add_canonical_url(df: DataFrame, href: str, base: str, out: str) -> DataFrame:
+def add_canonical_url(
+    df: DataFrame, href: str, base: str, out: str, *, drop_malformed: bool = False
+) -> DataFrame:
     """df + column ``out`` = canonical_link(href, base) (a NULL base is
-    no base), NULL where canonicalize_url raises or ``href`` is NULL."""
+    no base), NULL (or no row, with ``drop_malformed``) where
+    canonicalize_url raises or ``href`` is NULL."""
     h, b = f"`{href}`", f"`{base}`"
     abs_fast = f"{h} rlike r'^{_NO_DOTSEG}{_ABS_SHAPE}{_JOIN_END}'"
     # urljoin parses the base too, so it must be one urlsplit accepts:
@@ -457,35 +471,28 @@ def add_canonical_url(df: DataFrame, href: str, base: str, out: str) -> DataFram
                 "__cu_fast", fast_value, "__cu_j", "__cu_jraises", out
             ),
         ],
+        drop_malformed,
     )
 
 
-def drop_null(df: DataFrame, col: str) -> DataFrame:
-    """``df`` without the rows whose ``col``, a kernel output, is NULL.
-    Not a Filter: the optimizer pushes a filter below the kernel's
-    projections by inlining their expressions into the predicate, a tree
-    that grows with every reference (optimizing it did not finish in a
-    probe). A generator is a boundary no predicate crosses, so ``col``
-    is exploded from a 0- or 1-element array."""
-    c = f"`{col}`"
-    return (
-        df.selectExpr("*", f"explode(IF({c} IS NULL, array(), array({c}))) AS __cu_kept")
-        .drop(col)
-        .withColumnRenamed("__cu_kept", col)
-    )
-
-
-# --- JVM-side column helpers (no Python in the hot path) -------------------
+# urlsplit's netloc and path of a canonical URL (lowercase scheme, no
+# fragment), each the regex's one group: of the netloc, only the host --
+# a bracketed host up to its ']', else all but a last ':port'
+_HOST = (
+    r"^(?:[a-z][a-z0-9+.\-]*:)?//(\[[^\]/?#]*\]?"
+    r"|[^/?#]*?(?=(?::[^:/?#]*)?(?:[/?#]|\z)))"
+)
+_PATH = r"^(?:(?:[a-z][a-z0-9+.\-]*:)?//[^/?#]*|[a-z][a-z0-9+.\-]*:)?([^?#]*)"
 
 
 def host_col(url: Column) -> Column:
-    """Host of a canonical URL, JVM-side (codegen'd regexp)."""
-    return F.regexp_extract(url, r"^[a-z][a-z0-9+.-]*://([^/:?#]+)", 1)
+    """``url_host`` of a canonical URL, JVM-side (codegen'd regexp)."""
+    return F.regexp_extract(url, _HOST, 1)
 
 
 def path_col(url: Column) -> Column:
-    """Path of a canonical URL ('/' when empty), JVM-side."""
-    p = F.regexp_extract(url, r"^[a-z][a-z0-9+.-]*://[^/?#]*([^?#]*)", 1)
+    """``url_path`` of a canonical URL ('/' when empty), JVM-side."""
+    p = F.regexp_extract(url, _PATH, 1)
     return F.when(p == "", F.lit("/")).otherwise(p)
 
 

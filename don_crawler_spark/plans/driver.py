@@ -10,7 +10,9 @@ state flows parquet -> plan -> parquet on the executors.
 
 from __future__ import annotations
 
+import os
 import time
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -36,14 +38,37 @@ class CrawlSummary:
     wall_ms_per_round: list[int] = field(default_factory=list)
 
 
-def _empty_seen(spark: SparkSession) -> DataFrame:
-    """A seen set of no rows, planned in the JVM (``createDataFrame``
-    would scan a Python RDD and start a Python worker)."""
-    return spark.range(0).selectExpr(
-        *(
-            f"CAST(NULL AS {f.dataType.simpleString()}) AS {f.name}"
-            for f in SEEN_SCHEMA.fields
+def _empty_seen(spark: SparkSession, path: str) -> DataFrame:
+    """The seen set before round 1: a zero-row parquet file (pyarrow, no
+    Spark job) read as ``CheckpointStore.read_seen`` reads a round, so
+    round 1 plans, and compiles, what later rounds do (Catalyst would
+    prune the anti-join against an empty relation it can see)."""
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    schema = CheckpointStore._SEEN_READ_SCHEMA
+    os.makedirs(path, exist_ok=True)
+    pq.write_table(to_arrow_schema(schema).empty_table(), f"{path}/part-0.parquet")
+    return (
+        read_declared(spark, schema, path)
+        .filter(CheckpointStore._SEEN_FILTER_COL)
+        .select(*SEEN_SCHEMA.fieldNames())
+    )
+
+
+def _metrics(fetched_full: DataFrame) -> DataFrame:
+    """Per-partition counters (the metrics table): ONE job aggregates the
+    cached round output into one file, written even when empty (tooling
+    reads metrics for the terminal round too)."""
+    return (
+        fetched_full.groupBy(F.spark_partition_id().alias("partition_id"))
+        .agg(
+            F.count(F.lit(1)).alias("urls_fetched"),
+            F.sum((F.col("status") == 200).cast("long")).alias("urls_200"),
+            F.sum("n_links").alias("links_emitted"),
+            F.max("round").alias("round"),
         )
+        .coalesce(1)
     )
 
 
@@ -138,7 +163,9 @@ def run_crawl(
         store.write_table(frontier, 0, "frontier")
         store.commit_round(0, {"seeded": True})
     frontier = store.read_table(spark, start_round, "frontier")
-    seen = store.read_seen(spark, start_round) or _empty_seen(spark)
+    seen = store.read_seen(spark, start_round) or _empty_seen(
+        spark, store.table_path(0, "seen")
+    )
 
     # exact, from parquet footers (no Spark job); sizes the round's
     # Bloom prune of the pages scan
@@ -148,51 +175,26 @@ def run_crawl(
         t0 = time.monotonic()
         out = run_round(cfg, rnd, frontier, seen, pages, hosts, urls, n_frontier)
 
-        # Materialize in dependency order; manifest commit is the txn point.
-        # The fetched_full write runs FIRST and alone: it populates the
-        # round's persisted frames (ranked / selected / enriched), which
-        # every other output reads. The remaining two outputs — frontier
-        # write, metrics aggregate + write — only consume those caches and
-        # are mutually independent, so they run as CONCURRENT jobs from a
-        # small thread pool (guide §2.6: actions are only sequential
-        # because the driver calls them sequentially); the next job's
-        # tasks back-fill executors freed by the previous job's straggler
-        # tail. The commit point is unchanged: all writes complete before
-        # the manifest appears, so a crash mid-round still resumes from
-        # the previous round.
-        store.write_table(out.fetched_full, rnd, "fetched_full")
-
-        def _write_frontier() -> None:
-            store.write_table(out.new_frontier, rnd, "frontier")
-
-        def _write_metrics() -> None:
-            # per-partition lineage/counters (metrics table): ONE job
-            # aggregates the persisted round output (no parquet re-read)
-            # and writes the result as one file. Written even when empty:
-            # tooling reads metrics for the terminal round too.
-            agg = (
-                out.fetched_full
-                .groupBy(F.spark_partition_id().alias("partition_id"))
-                .agg(
-                    F.count(F.lit(1)).alias("urls_fetched"),
-                    F.sum((F.col("status") == 200).cast("long")).alias(
-                        "urls_200"
-                    ),
-                    F.sum("n_links").alias("links_emitted"),
-                )
-                .withColumn("round", F.lit(rnd))
-                .withColumn(
-                    "wall_ms",
-                    F.lit(int((time.monotonic() - t0) * 1000)).cast("long"),
-                )
-            )
-            store.write_table(agg.coalesce(1), rnd, "metrics")
-
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            for f in [pool.submit(_write_frontier), pool.submit(_write_metrics)]:
-                f.result()
+        # Materialize in dependency order; the manifest commit is the txn
+        # point. The fetched_full write runs FIRST and alone: it fills the
+        # round's caches (ranked / selected / enriched), which the two
+        # other writes (frontier, metrics) only read, so those run as
+        # CONCURRENT jobs from a small thread pool (guide §2.6), the next
+        # job's tasks back-filling the previous one's straggler tail. All
+        # writes complete before the manifest appears, so a crash
+        # mid-round resumes from the previous round.
+        try:
+            store.write_table(out.fetched_full, rnd, "fetched_full")
+            with ThreadPoolExecutor(max_workers=2) as pool:
+                for f in [
+                    pool.submit(store.write_table, out.new_frontier, rnd, "frontier"),
+                    pool.submit(store.write_table, _metrics(out.fetched_full), rnd,
+                                "metrics"),
+                ]:
+                    f.result()
+        finally:  # drop the round's caches, and only those
+            for df in out.persisted:
+                df.unpersist()
         # the round's counters, read back from the metrics file on the
         # driver (a few rows, no Spark job)
         counts = ds.dataset(
@@ -219,9 +221,6 @@ def run_crawl(
         summary.urls_fetched += n_selected
         summary.urls_200 += n_200
         summary.wall_ms_per_round.append(wall_ms)
-
-        # round state is checkpointed; drop the round's persisted frames
-        spark.catalog.clearCache()
 
         frontier = store.read_table(spark, rnd, "frontier")
         n_frontier = store.row_count(rnd, "frontier")

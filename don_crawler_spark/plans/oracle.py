@@ -44,6 +44,16 @@ class OracleResult:
     rounds: int = 0
 
 
+def fetch_status(url: str, rnd: int, pages, redirects, transient) -> int:
+    """301, 404, 503 while ``rnd <= fail_rounds``, else 200: the
+    engine's when-chain order (plans/round.py ``_status_expr``)."""
+    if url in redirects:
+        return 301
+    if pages.get(url) is None:
+        return 404
+    return 503 if url in transient and rnd <= transient[url] else 200
+
+
 def crawl_oracle(corpus_dir: str, config: CrawlConfig | None = None) -> OracleResult:
     cfg = config or CrawlConfig()
 
@@ -141,17 +151,7 @@ def crawl_oracle(corpus_dir: str, config: CrawlConfig | None = None) -> OracleRe
         n_503 = 0
         for seq, (rank, host, url) in enumerate(selected, start=1):
             html = pages.get(url)
-            # 301 first: aliases have no page row (must not read 404) and
-            # a redirect is final even inside a transient window — the
-            # engine's when-chain order (plans/round.py)
-            if url in redirects:
-                status = 301
-            elif html is None:
-                status = 404
-            elif url in transient and rnd <= transient[url]:
-                status = 503
-            else:
-                status = 200
+            status = fetch_status(url, rnd, pages, redirects, transient)
             res.trace.append((rnd, seq, host, url, status))
             frontier.pop(url, None)
             if status == 301:

@@ -18,7 +18,8 @@ Scale notes (the judge-facing design decisions):
   8-byte shuffle keys instead of URL strings; the seen anti-join and the
   pages fetch-join both shuffle on it, so at warehouse scale both tables
   are bucketed by ``url_hash`` and the joins are co-located (no shuffle of
-  the big side). Sandbox runs use plain parquet + AQE.
+  the big side). Local runs read plain parquet; the benchmark's
+  session runs with AQE off (static plans).
 * The per-host budget window partitions by ``host`` alone, so a hot
   host's candidates rank in one task. Its input is the frontier
   candidate set, already pruned by dedup/robots. There is no salted
@@ -27,10 +28,11 @@ Scale notes (the judge-facing design decisions):
   budget-bound one with a heavy host. Bring it back only with a hot-host
   workload that shows it paying.
 * ``seq_in_round`` is arithmetic, not a global sort: per-(level, host-salt)
-  cell counts + a θ-join cumulative offset + a per-cell partitioned rank
-  (see the inline note). No unpartitioned window touches the selected set
-  at any budget, and no window partition exceeds n_hosts/_SEQ_HOST_SALTS
-  rows.
+  cell counts, their running sum as offsets, and a per-cell partitioned
+  rank (see the inline note). The running sum is the one unpartitioned
+  window, over the cell-count table (at most levels x _SEQ_HOST_SALTS
+  rows): none touches the selected set at any budget, and no window
+  partition over it exceeds n_hosts/_SEQ_HOST_SALTS rows.
 * Extraction and link parsing are Catalyst expressions (functions/
   extract.py) evaluated map-side on the Bloom-pruned pages scan, before
   the fetch join's shuffle; links are canonicalized by Catalyst
@@ -43,7 +45,9 @@ Scale notes (the judge-facing design decisions):
 
 from __future__ import annotations
 
-from dataclasses import dataclass
+import functools
+from dataclasses import dataclass, replace
+from types import SimpleNamespace
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -64,7 +68,6 @@ from don_crawler_spark.functions.robots import robots_allowed_col
 from don_crawler_spark.functions.urls import (
     add_canonical_url,
     add_canonical_url_abs,
-    drop_null,
     host_col,
     path_col,
 )
@@ -84,6 +87,8 @@ FRONTIER_SCHEMA = StructType(
     ]
 )
 FRONTIER_COLS = FRONTIER_SCHEMA.fieldNames()
+# a selected row: a frontier row and the round it is fetched in
+_SELECTED_COLS = (*FRONTIER_COLS, "round")
 
 # sub-partitioning of the within-level sequence rank: level 1 holds one
 # row per host, so a window partitioned by level alone would sort every
@@ -101,6 +106,8 @@ class RoundOutput:
     # projections of it (see CheckpointStore._VIRTUAL)
     fetched_full: DataFrame
     new_frontier: DataFrame  # FRONTIER_COLS
+    # the round's caches, dependents first: dropping one re-plans no other
+    persisted: tuple[DataFrame, ...] = ()
 
 
 def frontier_from_seeds(seeds: DataFrame) -> DataFrame:
@@ -114,7 +121,9 @@ def frontier_from_seeds(seeds: DataFrame) -> DataFrame:
     repos = seeds.select(F.explode_outer("repo_urls").alias("raw_url")).filter(
         F.col("raw_url").isNotNull()
     )
-    urls = add_canonical_url_abs(orgs.unionByName(repos), "raw_url", "url")
+    urls = add_canonical_url_abs(
+        orgs.unionByName(repos), "raw_url", "url", drop_malformed=True
+    )
     return _frontier_from_urls(urls, src_url="")
 
 
@@ -123,29 +132,20 @@ def frontier_from_sitemaps(parsed: DataFrame) -> DataFrame:
     initial frontier: page URLs seed at depth 0 with the sitemap as
     provenance; index entries (``is_index``) are fetch targets for the
     NEXT sitemap round, not pages, so they are excluded here."""
-    urls = add_canonical_url_abs(
-        parsed.filter(~F.col("is_index")).select(
-            F.col("loc").alias("raw_url")
-        ),
-        "raw_url",
-        "url",
-    )
+    locs = parsed.filter(~F.col("is_index")).select(F.col("loc").alias("raw_url"))
+    urls = add_canonical_url_abs(locs, "raw_url", "url", drop_malformed=True)
     return _frontier_from_urls(urls, src_url="sitemap")
 
 
 def _frontier_from_urls(urls: DataFrame, src_url: str) -> DataFrame:
     """Canonical-URL rows -> depth-0 frontier shape (shared by every
-    seed source so FRONTIER_COLS changes happen in one place). A NULL
-    ``url`` (a malformed seed) is dropped before it is hashed."""
-    return (
-        drop_null(urls, "url")
-        .withColumn("url_hash", F.xxhash64("url"))
-        .withColumn("host", host_col(F.col("url")))
-        .withColumn("path", path_col(F.col("url")))
-        .withColumn("depth", F.lit(0))
-        .withColumn("src_url", F.lit(src_url))
-        .withColumn("attempts", F.lit(0))
-        .select(FRONTIER_COLS)
+    seed source so FRONTIER_COLS changes happen in one place). The
+    kernel has dropped the malformed seeds (a NULL ``url``)."""
+    url = F.col("url")
+    return urls.select(
+        F.xxhash64(url).alias("url_hash"), url, host_col(url).alias("host"),
+        path_col(url).alias("path"), F.lit(0).alias("depth"),
+        F.lit(src_url).alias("src_url"), F.lit(0).alias("attempts"),
     )
 
 
@@ -153,32 +153,37 @@ def _dedup_frontier(frontier: DataFrame) -> DataFrame:
     """Per-url_hash tuple-min on (depth, src_url, ...) — J5's per-key
     serialization without locks. Partial aggregation makes this a
     map-side combine before one shuffle on url_hash."""
-    return (
-        frontier.groupBy("url_hash")
-        .agg(
-            F.min(F.struct("depth", "src_url", "url", "host", "path")).alias("m"),
-            # retry counts survive duplicate discoveries (max-merge)
-            F.max("attempts").alias("attempts"),
-        )
-        .select(
-            "url_hash",
-            F.col("m.url").alias("url"),
-            F.col("m.host").alias("host"),
-            F.col("m.path").alias("path"),
-            F.col("m.depth").alias("depth"),
-            F.col("m.src_url").alias("src_url"),
-            "attempts",
-        )
+    key, aggs, out = _dedup_columns()
+    return frontier.groupBy(key).agg(*aggs).select(key, *out)
+
+
+@functools.cache
+def _dedup_columns() -> tuple:
+    """``_dedup_frontier``'s Column trees, built once per process."""
+    aggs = (
+        F.min(F.struct("depth", "src_url", "url", "host", "path")).alias("m"),
+        # retry counts survive duplicate discoveries (max-merge)
+        F.max("attempts").alias("attempts"),
+    )
+    return F.col("url_hash"), aggs, (F.col("m.*"), F.col("attempts"))
+
+
+def round_values(spark, cfg: CrawlConfig, rnd: int) -> DataFrame:
+    """The round's values as a one-row relation ``(round, round_ts)``:
+    data, where a literal would be compiled into the generated code."""
+    ts = cfg.round_ts(rnd).isoformat(sep=" ")
+    return spark.sql(
+        f"VALUES ({int(rnd)}, TIMESTAMP_NTZ '{ts}') AS round_values(round, round_ts)"
     )
 
 
-def _budget_expr(cfg: CrawlConfig, rnd: int):
+def _budget_expr(cfg: CrawlConfig):
     """budget(host) = min(max_per_round, round_budget_ms / crawl_delay_ms),
-    or 0 while the host backs off (not_before_ts > round start) — MUST be
-    the same arithmetic as CrawlConfig.host_budget. A host missing from
-    the host dimension reads null for all three inputs, so it gets the
-    default delay and cap and no back-off; a delay or cap of 0 also
-    means "use the default", as it does there."""
+    or 0 while the host backs off (not_before_ts > round_ts, the round's
+    start) — MUST be the same arithmetic as CrawlConfig.host_budget. A
+    host missing from the host dimension reads null for all three
+    inputs, so it gets the default delay and cap and no back-off; a delay
+    or cap of 0 also means "use the default", as it does there."""
 
     def or_default(col: str, default: int):
         return F.coalesce(F.nullif(F.col(col), F.lit(0)), F.lit(default))
@@ -186,10 +191,129 @@ def _budget_expr(cfg: CrawlConfig, rnd: int):
     delay = or_default("crawl_delay_ms", cfg.default_crawl_delay_ms)
     cap = or_default("max_per_round", cfg.default_max_per_round)
     return F.when(
-        F.col("not_before_ts") > F.lit(cfg.round_ts(rnd)), F.lit(0).cast("long")
+        F.col("not_before_ts") > F.col("round_ts"), F.lit(0).cast("long")
     ).otherwise(
         F.least(cap.cast("long"), F.floor(F.lit(cfg.round_budget_ms) / delay))
     )
+
+
+def _status_expr():
+    """Redirect alias -> 301 (first: an alias has no page row, and a 301
+    is final even in a transient window); no page -> 404; transient
+    window (``round <= fail_rounds``) -> 503 (P6/P7 retry); else 200."""
+    return (
+        F.when(F.col("target").isNotNull(), F.lit(301))
+        .when(F.col("text").isNull(), F.lit(404))
+        .when(F.col("round") <= F.col("fail_rounds"), F.lit(503))
+        .otherwise(F.lit(200))
+    )
+
+
+@functools.lru_cache(maxsize=8)
+def _round_columns(cfg: CrawlConfig) -> SimpleNamespace:
+    """A round's Column trees, by the frame they build: they read the
+    round's values as columns, so each config builds them once."""
+    c = SimpleNamespace(robots=robots_allowed_col(F.col("rules"), F.col("path")))
+    w_host = Window.partitionBy("host").orderBy("depth", "url_hash")
+    c.ranked = (
+        *_SELECTED_COLS,
+        _budget_expr(cfg).alias("budget"),
+        F.row_number().over(w_host).alias("rank_in_host"),
+    )
+    c.in_budget = F.col("rank_in_host") <= F.col("budget")
+    c.over_budget = ~c.in_budget
+    hsalt = F.pmod(F.xxhash64("host"), F.lit(_SEQ_HOST_SALTS))
+    c.cell = ("rank_in_host", hsalt.alias("__hsalt"))
+    c.cell_count = F.count(F.lit(1)).alias("cnt")
+    cells = Window.orderBy("rank_in_host", "__hsalt")
+    lower = F.sum("cnt").over(cells) - F.col("cnt")
+    c.offsets = ("rank_in_host", "__hsalt", lower.alias("__off"))
+    w_in_cell = Window.partitionBy("rank_in_host", hsalt).orderBy("host")
+    c.positioned = (
+        *_SELECTED_COLS, *c.cell, F.row_number().over(w_in_cell).alias("__pos")
+    )
+    c.sequenced = (
+        *_SELECTED_COLS,
+        (F.col("__off") + F.col("__pos")).cast("int").alias("seq_in_round"),
+    )
+    c.pages = (
+        F.xxhash64("url").alias("p_hash"), F.col("url").alias("p_url"),
+        "warc_ts", "html", "lang",
+    )
+    c.slim_pages = (
+        "p_hash", "p_url", "warc_ts", "lang", "text",
+        links_native_col(F.col("html")).alias("links"),
+    )
+    c.fetch_key = (F.col("url_hash") == F.col("p_hash")) & (
+        F.col("url") == F.col("p_url")
+    )
+    # ``status`` is a lateral alias: the later expressions read it
+    status = F.col("status")
+    follow = F.col("depth") + 1 <= cfg.max_depth
+    c.enriched = (
+        *_SELECTED_COLS, "seq_in_round", "warc_ts", "lang",
+        _status_expr().alias("status"),
+        F.when(status == 200, F.col("text")).alias("text"),
+        F.when((status == 200) & follow, F.col("links"))
+        # a 301's single outlink is its Location target, resolved
+        # downstream against the alias URL like any href
+        .when((status == 301) & follow, F.array(F.col("target")))
+        .otherwise(F.array().cast("array<string>"))
+        .alias("links"),
+        # a 503 whose retry budget is not exhausted requeues and must
+        # NOT enter the seen-set; anything else (200, 404, exhausted
+        # 503) is final
+        ((status != 503) | (F.col("attempts") + 1 > F.lit(cfg.max_retries))).alias(
+            "__seen_eligible"
+        ),
+    )
+    c.eligible = F.col("__seen_eligible")
+    c.requeued = ~c.eligible
+    # FRONTIER_COLS ends with attempts
+    c.retry = (*FRONTIER_COLS[:-1], (F.col("attempts") + 1).alias("attempts"))
+    c.exploded = (
+        F.explode("links").alias("href"),
+        (F.col("depth") + 1).alias("depth"),
+        F.col("url").alias("src_url"),
+    )
+    fetched = [
+        "round", "seq_in_round", "host", "url", "url_hash",
+        F.col("round").alias("first_round"), "status", "attempts",
+        "__seen_eligible", F.col("warc_ts").alias("fetch_ts"), "text", "lang",
+        F.size("links").alias("n_links"),
+    ]
+    if cfg.enrich_fetched:
+        # dedup-ready page enrichment: simhash_v2 fingerprint (JVM-native
+        # xxhash64 kernel — the versioned successor of the md5 v1 kernel,
+        # operators/dedup.py:simhash_native_col; with it the entire round
+        # DAG contains no Python UDF) + token count + quality heuristics
+        # (codegen'd) per fetched page
+        from don_crawler_spark.operators.dedup import simhash_native_col
+
+        toks = F.filter(F.split(F.col("text"), " "), lambda t: t != "")
+        n_chars = F.length("text")
+        n_punct = n_chars - F.length(F.regexp_replace("text", r"[.,;:!?]", ""))
+        fetched += [
+            simhash_native_col(F.col("text")).alias("simhash"),
+            F.size(toks).alias("n_tokens"),
+            (
+                F.lit(0.5) * F.least(F.lit(1.0), F.size(toks) / F.lit(100.0))
+                + F.lit(0.5) * (F.lit(1.0) - n_punct / F.greatest(n_chars, F.lit(1)))
+            ).alias("quality"),
+        ]
+    c.fetched = tuple(fetched)
+    url = F.col("l_url")
+    c.new_link = (
+        F.xxhash64(url).alias("url_hash"), url.alias("url"),
+        host_col(url).alias("host"), path_col(url).alias("path"),
+        "depth", "src_url", F.lit(0).alias("attempts"),
+    )
+    c.frontier, c.url_hash = tuple(FRONTIER_COLS), ("url_hash",)
+    # a column name costs two py4j calls per use, a Column none
+    for name, cols in list(vars(c).items()):
+        if isinstance(cols, tuple):
+            setattr(c, name, tuple(F.col(x) if isinstance(x, str) else x for x in cols))
+    return c
 
 
 def run_round(
@@ -205,6 +329,11 @@ def run_round(
 ) -> RoundOutput:
     """Build the round-``rnd`` DAG. Nothing is executed here: the driver
     runs the round's jobs when it writes the outputs to the checkpoint.
+
+    ``rnd`` and ``cfg.round_ts(rnd)`` enter as data, the one-row
+    ``round_values`` relation, never as literals: the back-off test, the
+    transient window and the ``round`` columns read its columns, so every
+    round runs the same generated code and compiles no new class.
 
     The round checks the seen set once, at its end: the new links are
     anti-joined against ``seen`` plus this round's seen delta, which is
@@ -224,72 +353,45 @@ def run_round(
     ``hosts`` and ``urls`` are the corpus dimensions of
     ``driver.load_corpus``, each broadcast-joined once.
     """
+    # max_rounds shapes no Column: crawls that differ in it share them
+    c = _round_columns(replace(cfg, max_rounds=0))
+    spark = frontier.sparkSession
     # one broadcast join against the host dimension feeds both the
-    # robots allow/deny (longest-prefix) and the politeness budget
-    allowed = (
+    # robots allow/deny (longest-prefix) and the politeness budget; the
+    # round's values join as a cartesian product with their one row
+    ranked = (
         _dedup_frontier(frontier)
+        .crossJoin(round_values(spark, cfg, rnd).hint("shuffle_replicate_nl"))
         .join(F.broadcast(hosts), "host", "left")
-        .filter(robots_allowed_col(F.col("rules"), F.col("path")))
-        .select(*FRONTIER_COLS, _budget_expr(cfg, rnd).alias("budget"))
+        .filter(c.robots)
+        .select(*c.ranked)
     )
-
-    w_host = Window.partitionBy("host").orderBy("depth", "url_hash")
-    ranked = allowed.withColumn("rank_in_host", F.row_number().over(w_host))
     if persist:
-        # selected (twice: the level counts below and the rows
+        # selected (twice: the cell counts below and the rows
         # themselves) and deferred (the next frontier) all branch off
         # the budget window; cache it so it runs once per round
         ranked = ranked.persist()
-    selected = ranked.filter(F.col("rank_in_host") <= F.col("budget"))
-    deferred = ranked.filter(F.col("rank_in_host") > F.col("budget")).drop(
-        "rank_in_host"
-    )
+    selected = ranked.filter(c.in_budget)
+    deferred = ranked.filter(c.over_budget)
 
     # canonical global order within the round: (rank_in_host, host_salt,
-    # host), WITHOUT a global sort. A plain Window.orderBy would collapse
-    # the selected set into one task per round (a serial sort at
-    # production budgets). Instead the sequence number is pure arithmetic
-    # over (level, salt) cells:
+    # host), WITHOUT a global sort of the selected set. A plain
+    # Window.orderBy over it would collapse the selected set into one
+    # task per round (a serial sort at production budgets). Instead the
+    # sequence number is arithmetic over (level, salt) cells:
     #   seq(r, s, h) = Σ_{(r',s') < (r,s)} cnt(r', s')   (lower cells)
     #                + pos(h | cell (r, s))     (host's position in cell)
     # cnt per cell comes from a tiny aggregate (levels x _SEQ_HOST_SALTS
-    # rows); the cumulative offset is a θ-self-join of that aggregate (no
-    # unpartitioned window anywhere); the within-cell position is a window
-    # PARTITIONED by (level, salt) — every partition is bounded by
-    # n_hosts / _SEQ_HOST_SALTS even at level 1 (the r2 single-task
-    # residue; see the _SEQ_HOST_SALTS note).
-    selected = selected.withColumn(
-        "__hsalt", F.pmod(F.xxhash64("host"), F.lit(_SEQ_HOST_SALTS))
-    )
-    cell_counts = selected.groupBy("rank_in_host", "__hsalt").agg(
-        F.count(F.lit(1)).alias("cnt")
-    )
-    lo = cell_counts.select(
-        F.col("rank_in_host").alias("lo_rank"),
-        F.col("__hsalt").alias("lo_salt"),
-        F.col("cnt").alias("lo_cnt"),
-    )
-    offsets = (
-        cell_counts.join(
-            F.broadcast(lo),
-            (lo["lo_rank"] < cell_counts["rank_in_host"])
-            | (
-                (lo["lo_rank"] == cell_counts["rank_in_host"])
-                & (lo["lo_salt"] < cell_counts["__hsalt"])
-            ),
-            "left",
-        )
-        .groupBy("rank_in_host", "__hsalt")
-        .agg(F.coalesce(F.sum("lo_cnt"), F.lit(0)).alias("__off"))
-    )
-    w_in_cell = Window.partitionBy("rank_in_host", "__hsalt").orderBy("host")
+    # rows; unique keys) and its running sum is the cell's offset: the
+    # round's one unpartitioned window, over that table only. The within-cell
+    # position is a window PARTITIONED by (level, salt) — every partition
+    # is bounded by n_hosts / _SEQ_HOST_SALTS even at level 1 (the r2
+    # single-task residue; see the _SEQ_HOST_SALTS note).
+    offsets = selected.groupBy(*c.cell).agg(c.cell_count).select(*c.offsets)
     selected = (
-        selected.withColumn("__pos", F.row_number().over(w_in_cell))
+        selected.select(*c.positioned)
         .join(F.broadcast(offsets), ["rank_in_host", "__hsalt"])
-        .withColumn(
-            "seq_in_round", (F.col("__off") + F.col("__pos")).cast("int")
-        )
-        .drop("__pos", "__off", "__hsalt")
+        .select(*c.sequenced)
         .repartition(F.col("url_hash"))
     )
 
@@ -320,16 +422,10 @@ def run_round(
     # back to the un-pruned scan: degraded cost, same rows.
     if persist:
         selected = selected.persist()
-    p = pages.select(
-        F.xxhash64("url").alias("p_hash"),
-        F.col("url").alias("p_url"),
-        "warc_ts",
-        "html",
-        "lang",
-    )
+    p = pages.select(*c.pages)
     n_items = max(1, n_frontier)
     maybe_sel = native_bloom.bloom_membership_col(
-        selected.select("url_hash"), "url_hash", p["p_hash"], n_items, 16 * n_items
+        selected.select(*c.url_hash), "url_hash", p["p_hash"], n_items, 16 * n_items
     )
     p_matched = p.filter(maybe_sel) if maybe_sel is not None else p
     # X1 extraction + link discovery run HERE — map-side on the pruned
@@ -339,71 +435,23 @@ def run_round(
     # JVM-native Catalyst expressions (functions/extract.py): html never
     # enters a Python worker, the whole scan-extract-project pipeline
     # stays in one codegen span.
-    p_slim = with_extracted_description(p_matched, "html", "text").select(
-        "p_hash",
-        "p_url",
-        "warc_ts",
-        "lang",
-        "text",
-        links_native_col(F.col("html")).alias("links"),
-    ).hint("shuffle_hash")  # not sort-merge: no sort of the slim pages
-    fetched_raw = selected.join(
-        p_slim,
-        (selected["url_hash"] == p_slim["p_hash"])
-        & (selected["url"] == p_slim["p_url"]),
-        "left",
-    ).drop("p_hash", "p_url")
-
-    # per-URL fetch outcomes: one broadcast join against the URL
-    # dimension (redirect target, transient fail_rounds)
-    fetched_raw = fetched_raw.join(F.broadcast(urls), "url", "left")
-
-    # status: redirect alias -> 301 (checked first: aliases have no page
-    # row and must not read as 404, and a 301 is final even in a
-    # transient window); no page -> 404 (dead link); transient window ->
-    # 503 (P6/P7 retry path); else 200. 503 attempts yield no text/links.
-    status = (
-        F.when(F.col("target").isNotNull(), F.lit(301))
-        .when(F.col("text").isNull(), F.lit(404))
-        .when(F.lit(rnd) <= F.col("fail_rounds"), F.lit(503))
-        .otherwise(F.lit(200))
+    p_slim = (
+        with_extracted_description(p_matched, "html", "text")
+        .select(*c.slim_pages)
+        .hint("shuffle_hash")  # not sort-merge: no sort of the slim pages
     )
-    enriched = (
-        fetched_raw.withColumn("status", status)
-        .withColumn(
-            "text",
-            F.when(F.col("status") == 200, F.col("text")).otherwise(
-                F.lit(None).cast("string")
-            ),
-        )
-        .withColumn(
-            "links",
-            F.when(
-                (F.col("status") == 200) & (F.col("depth") + 1 <= cfg.max_depth),
-                F.col("links"),
-            )
-            .when(
-                # a 301's single outlink is its Location target, resolved
-                # downstream against the alias URL like any href
-                (F.col("status") == 301) & (F.col("depth") + 1 <= cfg.max_depth),
-                F.array(F.col("target")),
-            )
-            .otherwise(F.array().cast("array<string>")),
-        )
-        .withColumn(
-            # a 503 whose retry budget is not exhausted requeues and must
-            # NOT enter the seen-set; anything else (200, 404, exhausted
-            # 503) is final
-            "__seen_eligible",
-            (F.col("status") != 503)
-            | (F.col("attempts") + 1 > F.lit(cfg.max_retries)),
-        )
+    fetched_raw = selected.join(p_slim, c.fetch_key, "left")
+    # per-URL fetch outcomes: one broadcast join against the URL
+    # dimension (redirect target, transient fail_rounds); then the
+    # status and what it keeps (503 attempts yield no text/links)
+    enriched = fetched_raw.join(F.broadcast(urls), "url", "left").select(
+        *c.enriched
     )
 
     # The driver materializes the outputs of this DAG; without a cache
     # each write would re-execute the joins/windows/UDFs from scratch.
     # A round holds three caches (the driver drops them once the round's
-    # checkpoint commits): ``ranked``, read by the sequence arithmetic
+    # outputs are written): ``ranked``, read by the sequence arithmetic
     # and by the deferred branch of the next frontier; the post-sequence
     # ``selected``, read by the fetch join and its pages prune; and
     # ``enriched``, read by every output (fetched_full, the metrics
@@ -413,78 +461,23 @@ def run_round(
 
     # ONE fact table per round; trace / fetched / seen_delta are read-time
     # projections (CheckpointStore._VIRTUAL) — the row set is identical.
-    fetched_cols = [
-        F.lit(rnd).alias("round"),
-        "seq_in_round",
-        "host",
-        "url",
-        "url_hash",
-        F.lit(rnd).alias("first_round"),
-        "status",
-        "attempts",
-        "__seen_eligible",
-        F.col("warc_ts").alias("fetch_ts"),
-        "text",
-        "lang",
-        F.size("links").alias("n_links"),
-    ]
-    if cfg.enrich_fetched:
-        # dedup-ready page enrichment: simhash_v2 fingerprint (JVM-native
-        # xxhash64 kernel — the versioned successor of the md5 v1 kernel,
-        # operators/dedup.py:simhash_native_col; with it the entire round
-        # DAG contains no Python UDF) + token count + quality heuristics
-        # (codegen'd) per fetched page
-        from don_crawler_spark.operators.dedup import simhash_native_col
+    fetched_full = enriched.select(*c.fetched)
 
-        toks = F.filter(F.split(F.col("text"), " "), lambda t: t != "")
-        n_chars = F.length("text")
-        n_punct = n_chars - F.length(F.regexp_replace("text", r"[.,;:!?]", ""))
-        fetched_cols += [
-            simhash_native_col(F.col("text")).alias("simhash"),
-            F.size(toks).alias("n_tokens"),
-            (
-                F.lit(0.5) * F.least(F.lit(1.0), F.size(toks) / F.lit(100.0))
-                + F.lit(0.5) * (F.lit(1.0) - n_punct / F.greatest(n_chars, F.lit(1)))
-            ).alias("quality"),
-        ]
-    fetched_full = enriched.select(*fetched_cols)
-
-    exploded = enriched.select(
-        F.explode("links").alias("href"),
-        (F.col("depth") + 1).alias("depth"),
-        F.col("url").alias("src_url"),
-    )
+    exploded = enriched.select(*c.exploded)
     # a malformed href (NULL canonical URL) is dropped, not hashed
-    new_links = drop_null(
-        add_canonical_url(exploded, "href", "src_url", "l_url"), "l_url"
-    ).select(
-        F.xxhash64("l_url").alias("url_hash"),
-        F.col("l_url").alias("url"),
-        host_col(F.col("l_url")).alias("host"),
-        path_col(F.col("l_url")).alias("path"),
-        "depth",
-        "src_url",
-        F.lit(0).alias("attempts"),
-    )
+    new_links = add_canonical_url(
+        exploded, "href", "src_url", "l_url", drop_malformed=True
+    ).select(*c.new_link)
 
     # next frontier: deferred rows keep their place; new links join them;
     # retriable 503s requeue with attempts+1. Only the new links are
     # scrubbed against the updated seen set: the round's one seen check,
     # and what makes the next round's input disjoint from its seen set.
     # Deferred and retry rows cannot be seen (see the INVARIANT above).
-    seen_now = seen.select("url_hash").unionByName(
-        fetched_full.filter(F.col("__seen_eligible")).select("url_hash")
+    seen_now = seen.select(*c.url_hash).union(
+        enriched.filter(c.eligible).select(*c.url_hash)
     )
-    new_links = new_links.join(seen_now, "url_hash", "left_anti")
-    retry = enriched.filter(~F.col("__seen_eligible")).select(
-        "url_hash",
-        "url",
-        "host",
-        "path",
-        "depth",
-        "src_url",
-        (F.col("attempts") + 1).alias("attempts"),
-    )
+    retry = enriched.filter(c.requeued).select(*c.retry)
     # the 3-way union stacks every branch's partitions (deferred carries
     # the window widths, links the anti-join width, retry the persist
     # width — 300+ partitions of a politeness-bounded frontier), so the
@@ -493,15 +486,16 @@ def run_round(
     # 2x the session's parallelism, scale-relative rather than a local
     # constant. coalesce adds no shuffle; it merges the union's input
     # partitions into n_out write tasks.
-    n_out = 2 * frontier.sparkSession.sparkContext.defaultParallelism
+    n_out = 2 * spark.sparkContext.defaultParallelism
     new_frontier = (
-        deferred.select(FRONTIER_COLS)
-        .unionByName(new_links.select(FRONTIER_COLS))
-        .unionByName(retry.select(FRONTIER_COLS))
+        deferred.select(*c.frontier)
+        .union(new_links.join(seen_now, "url_hash", "left_anti"))
+        .union(retry)
         .coalesce(n_out)
     )
 
     return RoundOutput(
         fetched_full=fetched_full,
         new_frontier=new_frontier,
+        persisted=(enriched, selected, ranked) if persist else (),
     )

@@ -200,12 +200,14 @@ def get_spark(
         # evicted its own classes before the next one asked for them: a
         # byte-identical repeat of round 2 missed 119-122 of its classes
         # (Janino compile, then JIT, again); with this cache it misses
-        # 2, both the metrics aggregate's final stage, which inlines the
-        # round's wall_ms as a literal. A new round adds 10-21 classes
-        # (its round number and round_ts are inlined literals too).
-        # 1000 entries hold a round's classes plus dozens of rounds'
-        # literal classes; a class is ~2.3 KB of bytecode on average
-        # (13.5 KB max), so a full cache is a few MB. It is a plan-shape
+        # none. A round's number and start reach its plan as data, not
+        # literals (plans/round.py round_values), so a new round adds no
+        # class either: round 3 after round 2 compiles 0 (8 while they
+        # were inlined), and so does round 2 after round 1 (16), whose
+        # seed round reads its empty seen set as a parquet scan, the
+        # way later rounds read theirs. 1000 entries hold a round's
+        # classes with room to spare; a class is ~2.3 KB of bytecode on
+        # average (13.5 KB max), so a full cache is a few MB. It is a plan-shape
         # constant like the settings above, not a host-tuned one.
         # Static conf: the JVM reads it once.
         .config("spark.sql.codegen.cache.maxEntries", "1000")

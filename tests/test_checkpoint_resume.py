@@ -122,7 +122,8 @@ def test_round_handles_hosts_missing_from_either_table(spark, tmp_path) -> None:
     rows, frontier = _frontier(
         spark, (rules_only, budgets_only, neither, both), paths
     )
-    out = run_round(cfg, rnd, frontier, _empty_seen(spark),
+    seen = _empty_seen(spark, str(tmp_path / "seen"))
+    out = run_round(cfg, rnd, frontier, seen,
                     *load_corpus(spark, str(corpus)), len(rows), persist=False)
     fetched = out.fetched_full.select("url", "host", "status").collect()
     deferred = {r["url"] for r in out.new_frontier.collect()}
@@ -159,7 +160,8 @@ def test_zero_delay_or_cap_means_default(spark, tmp_path) -> None:
     corpus = tmp_path / "c"
     _write_hand_built_corpus(corpus, {}, budgets)
     rows, frontier = _frontier(spark, budgets, [f"/p{i}" for i in range(80)])
-    out = run_round(cfg, 1, frontier, _empty_seen(spark),
+    seen = _empty_seen(spark, str(tmp_path / "seen"))
+    out = run_round(cfg, 1, frontier, seen,
                     *load_corpus(spark, str(corpus)), len(rows), persist=False)
     fetched = out.fetched_full.select("host").collect()
     got = {h: sum(r["host"] == h for r in fetched) for h in budgets}
@@ -192,12 +194,10 @@ def _crawl_base(spark, tmp_path, **corpus_kw) -> tuple[str, str]:
 
 
 def test_repeated_round_reuses_compiled_code(spark, tmp_path) -> None:
-    """Every round runs the same plan shape, so a repeat of a round
-    compiles only the classes that inline a per-crawl literal: the
-    metrics aggregate's final stage, which carries the round's
-    ``wall_ms`` (compiled twice by the metrics write). With the default
-    100-entry codegen cache, smaller than one round's ~130 classes, the
-    repeat recompiles about a hundred classes."""
+    """Every round runs the same plan shape and no per-round literal, so
+    a repeat of a round compiles no class. With the default 100-entry
+    codegen cache, smaller than one round's ~130 classes, the repeat
+    recompiles about a hundred classes."""
     import shutil
 
     from don_crawler_spark.plans.config import CrawlConfig
@@ -216,8 +216,7 @@ def test_repeated_round_reuses_compiled_code(spark, tmp_path) -> None:
         return compiles() - before
 
     resume_round_2(str(tmp_path / "first"))
-    wall_ms_classes = 2
-    assert resume_round_2(str(tmp_path / "repeat")) <= wall_ms_classes
+    assert resume_round_2(str(tmp_path / "repeat")) == 0
 
 
 def test_crawl_reads_run_no_job(spark, tmp_path) -> None:
@@ -283,3 +282,128 @@ def test_mistyped_frontier_column_fails_before_the_round_commits(
     with pytest.raises(Exception, match=r"DATA_TYPE_MISMATCH.*column \[depth\]"):
         run_crawl(spark, corpus, base, CrawlConfig(max_rounds=2))
     assert _manifests(base) == before
+
+
+def test_budget_expr_matches_host_budget_differentially(spark) -> None:
+    """``_budget_expr``, fed the round start as data (``round_values``),
+    equals ``CrawlConfig.host_budget`` on seeded inputs over rounds 1-3:
+    delay and cap null, 0 or positive; back-off null, or before, at or
+    after the round start."""
+    import datetime as dt
+    import random
+
+    from don_crawler_spark.plans.config import CrawlConfig
+    from don_crawler_spark.plans.round import _budget_expr, round_values
+
+    cfg = CrawlConfig()
+    rng = random.Random(20261020)
+    bad, shapes = [], set()
+    for rnd in (1, 2, 3):
+        start = cfg.round_ts(rnd)
+        shift = lambda: dt.timedelta(milliseconds=rng.randint(1, 10**7))  # noqa: E731
+        rows = [
+            (
+                i,
+                rng.choice([None, 0, rng.randint(1, 120_000)]),
+                rng.choice([None, 0, rng.randint(1, 500)]),
+                rng.choice([None, start - shift(), start, start + shift()]),
+            )
+            for i in range(300)
+        ]
+        df = spark.createDataFrame(
+            rows,
+            "i int, crawl_delay_ms bigint, max_per_round int,"
+            " not_before_ts timestamp_ntz",
+        ).crossJoin(round_values(spark, cfg, rnd))
+        got = dict(df.select("i", _budget_expr(cfg)).collect())
+        for i, delay, cap, nb in rows:
+            if got[i] != cfg.host_budget(delay, cap, nb, rnd):
+                bad.append((rnd, delay, cap, nb, got[i]))
+            shapes.add((
+                delay if not delay else "pos",
+                cap if not cap else "pos",
+                nb if nb is None else (nb > start) - (nb < start),
+            ))
+    assert bad == []
+    assert len(shapes) == 3 * 3 * 4  # every combination was drawn
+
+
+def test_status_chain_matches_oracle_differentially(spark) -> None:
+    """The round's status chain, fed the round number as data, equals
+    the oracle's ``fetch_status`` (301 -> 404 -> 503 -> 200) on seeded
+    URLs over rounds 1-3: fail_rounds absent or rnd-1, rnd, rnd+1; with
+    and without a page; redirect aliases, some also transient."""
+    import random
+
+    from don_crawler_spark.plans.config import CrawlConfig
+    from don_crawler_spark.plans.oracle import fetch_status
+    from don_crawler_spark.plans.round import _status_expr, round_values
+
+    cfg = CrawlConfig()
+    rng = random.Random(20261021)
+    bad, statuses = [], set()
+    for rnd in (1, 2, 3):
+        pages, redirects, transient, rows = {}, {}, {}, []
+        for i in range(300):
+            url = f"https://h{i % 7}.example/p{i}"
+            if rng.random() < 0.7:
+                pages[url] = b"<p>x</p>"
+            if rng.random() < 0.25:
+                redirects[url] = f"https://h{i % 7}.example/q{i}"
+            fail = rng.choice([None, rnd - 1, rnd, rnd + 1])
+            if fail is not None:
+                transient[url] = fail
+            text = rng.choice(["t", ""]) if url in pages else None
+            rows.append((i, url, redirects.get(url), text, fail))
+        df = spark.createDataFrame(
+            rows, "i int, url string, target string, text string, fail_rounds int"
+        ).crossJoin(round_values(spark, cfg, rnd))
+        got = dict(df.select("i", _status_expr()).collect())
+        for i, url, target, text, fail in rows:
+            want = fetch_status(url, rnd, pages, redirects, transient)
+            statuses.add(want)
+            if got[i] != want:
+                bad.append((rnd, target, text, fail, got[i], want))
+        # a redirect alias inside its transient window is still a 301
+        assert any(
+            t is not None and f is not None and rnd <= f
+            for _, _, t, _, f in rows
+        )
+    assert bad == []
+    assert statuses == {200, 301, 404, 503}
+
+
+def test_new_round_reuses_compiled_code(spark, tmp_path) -> None:
+    """The round number and the round start enter a round's plan as
+    data, not literals, so a new round runs the code the previous round
+    compiled: resuming round 3 after round 2 compiles at most 2 classes."""
+    from don_crawler_spark.plans.config import CrawlConfig
+    from don_crawler_spark.plans.driver import run_crawl
+
+    corpus, base = _crawl_base(spark, tmp_path)
+    assert run_crawl(spark, corpus, base, CrawlConfig(max_rounds=2)).rounds == 2
+    codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    before = codegen.METRIC_COMPILATION_TIME().getCount()
+    assert run_crawl(spark, corpus, base, CrawlConfig(max_rounds=3)).rounds == 3
+    assert codegen.METRIC_COMPILATION_TIME().getCount() - before <= 2
+
+
+def test_crawl_keeps_the_callers_caches(spark, tmp_path) -> None:
+    """A crawl drops its own round caches and no other: a frame the
+    caller persisted before ``run_crawl`` is still cached afterwards,
+    and no cached RDD of the crawl's rounds remains."""
+    from pyspark import StorageLevel
+
+    from don_crawler_spark.plans.config import CrawlConfig
+    from don_crawler_spark.plans.driver import run_crawl
+
+    corpus, base = _crawl_base(spark, tmp_path)
+    mine = spark.range(100).selectExpr("id * 2 AS x").persist()
+    assert mine.count() == 100
+    before = set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+    assert run_crawl(spark, corpus, base, CrawlConfig(max_rounds=2)).rounds == 2
+    after = set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+    assert mine.storageLevel != StorageLevel.NONE
+    assert after - before == set()
+    assert before & after  # the caller's cached RDD
+    mine.unpersist()

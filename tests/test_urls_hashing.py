@@ -378,3 +378,28 @@ def test_kernel_matches_canonical_link_differentially(spark) -> None:
     n_none = sum(canonical_link(h, b) is None for h, b in pairs)
     assert 0.02 * len(pairs) < n_none < 0.3 * len(pairs)
     assert sum(h.startswith("/") and (b or "").startswith("http") for h, b in pairs) > 500
+
+
+def test_host_path_cols_match_python_differentially(spark) -> None:
+    """host_col / path_col equal url_host / url_path on every canonical
+    URL of the seeded generator above (bracketed IPv6 hosts with and
+    without a port included): one rule, a bracketed host up to its ']'
+    and a netloc's last ':port' stripped."""
+    import random
+
+    from pyspark.sql import functions as F
+
+    from don_crawler_spark.functions.urls import canonical_link, host_col, path_col
+
+    rng = random.Random(20261020)
+    canon = {canonical_link(_gen_url(rng), _gen_base(rng)) for _ in range(20_000)}
+    canon |= {"http://[::1]/x", "http://[::1]:8080/x", "https://[v1.abc]:1"}
+    urls = sorted(canon - {None})
+    df = spark.createDataFrame([(u,) for u in urls], "url string").select(
+        "url", host_col(F.col("url")).alias("h"), path_col(F.col("url")).alias("p")
+    )
+    bad = [r for r in df.collect()
+           if (r["h"], r["p"]) != (url_host(r["url"]), url_path(r["url"]))]
+    assert bad == []
+    assert url_host("http://[::1]/x") == url_host("http://[::1]:8080/x") == "[::1]"
+    assert sum(url_host(u).startswith("[") for u in urls) > 10
