@@ -1,13 +1,16 @@
 #!/usr/bin/env python
-"""Round-6 optimization measurement harness (bench.py itself is FROZEN —
-this file holds the extra instrumentation the optimization round needs:
-noop-sink isolation per guide §1.4, per-query Spark job counts, explain
-dumps for plans/r06/, and a phase-instrumented crawl).
+"""Per-query timer for the registered query suite (``__spark_entry__``).
+
+Each query runs on a noop sink, so the time is the query's own work and
+no write; each run reports its Spark job count. ``--explain`` dumps one
+query's formatted physical plan instead.
 
 Usage:
   python bench_extra.py --queries graph_hits,graph_pagerank --repeats 3
-  python bench_extra.py --explain graph_hits --out plans/r06/graph_hits_before.txt
-  python bench_extra.py --crawl            # instrumented crawl, per-round/phase walls
+  python bench_extra.py --explain graph_hits [--out graph_hits.txt]
+
+Reads the corpus from $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1)
+and runs local[$SPARK_GRAFT_CPUS] (default 32).
 """
 
 from __future__ import annotations
@@ -26,7 +29,7 @@ sys.path.insert(0, REPO)
 def make_spark(cpus: int):
     from don_crawler_spark.session import get_spark
 
-    # identical to bench.py's session so timings are comparable
+    # static plans (AQE off) and 16 MB file splits, as the benchmark runs
     return get_spark(
         "don-crawler-bench-extra",
         cpus=cpus,
@@ -38,7 +41,16 @@ def make_spark(cpus: int):
     )
 
 
+def next_job_id(spark) -> int:
+    """The id the scheduler gives the next Spark job. Ids are sequential,
+    so a run's job count is the difference of two reads. (The length of
+    ``statusTracker().getJobIdsForGroup(None)`` is not: it stops growing,
+    or shrinks, once Spark evicts jobs past ``spark.ui.retainedJobs``.)"""
+    return int(spark.sparkContext._jsc.sc().dagScheduler().nextJobId())
+
+
 def probe_mbs() -> float:
+    """Memory fill bandwidth in MB/s: the host state a timing ran in."""
     import numpy as np
 
     a = np.empty(100 * 1024 * 1024, dtype=np.int8)
@@ -53,81 +65,46 @@ def main() -> None:
     ap.add_argument("--queries", type=str, default=None)
     ap.add_argument("--repeats", type=int, default=3)
     ap.add_argument("--explain", type=str, default=None)
-    ap.add_argument("--out", type=str, default=None)
-    ap.add_argument("--crawl", action="store_true")
-    ap.add_argument("--crawl-repeats", type=int, default=1)
+    ap.add_argument("--out", type=str, default=None,
+                    help="--explain writes here (default: stdout)")
     ap.add_argument("--json", type=str, default=None, help="append result line here")
     args = ap.parse_args()
+
+    import __spark_entry__ as entry_mod
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", 32))
     spark = make_spark(cpus)
     sc = spark.sparkContext
-    result: dict = {"probe_before": probe_mbs()}
+    queries = entry_mod.queries()
 
     if args.explain:
-        import __spark_entry__ as entry_mod
-
-        q = entry_mod.queries()[args.explain]
-        df = q(spark, sf_dir)
-        txt = df._sc._jvm.PythonSQLUtils.explainString(  # noqa: SLF001
+        df = queries[args.explain](spark, sf_dir)
+        txt = sc._jvm.PythonSQLUtils.explainString(  # noqa: SLF001
             df._jdf.queryExecution(), "formatted"
         )
-        out = args.out or f"plans/r06/{args.explain}.txt"
-        os.makedirs(os.path.dirname(out), exist_ok=True)
-        with open(out, "w") as fh:
-            fh.write(txt)
-        print(f"wrote {out} ({len(txt)} bytes)")
+        if args.out:
+            with open(args.out, "w") as fh:
+                fh.write(txt)
+            print(f"wrote {args.out} ({len(txt)} bytes)")
+        else:
+            print(txt)
         spark.stop()
         return
 
-    if args.crawl:
-        from don_crawler_spark.plans import checkpoint as ckpt_mod
-        from bench import bench_corpus, run_crawl_bench
-
-        # instrument checkpoint writes with wall timing
-        phase: dict[str, float] = {}
-        orig_write = ckpt_mod.CheckpointStore.write_table
-
-        def timed_write(self, df, rnd, name):
-            t0 = time.monotonic()
-            orig_write(self, df, rnd, name)
-            phase[f"r{rnd}:{name}"] = round(time.monotonic() - t0, 3)
-
-        ckpt_mod.CheckpointStore.write_table = timed_write
-        # warmup (same as bench.py)
-        run_crawl_bench(spark, 0.1, max_rounds=1, n_pages=2000)
-        phase.clear()
-        walls = []
-        for _ in range(args.crawl_repeats):
-            j0 = sc.statusTracker().getJobIdsForGroup(None)
-            r = run_crawl_bench(spark, 0.1)
-            walls.append(r["crawl_wall_sec"])
-            result["crawl_last"] = r
-        result["crawl_walls"] = walls
-        result["phase_walls"] = phase
-        ckpt_mod.CheckpointStore.write_table = orig_write
-        print(json.dumps(result, indent=1))
-        spark.stop()
-        return
-
-    import __spark_entry__ as entry_mod
-
-    queries = entry_mod.queries()
-    names = args.queries.split(",") if args.queries else []
+    result: dict = {"probe_before": probe_mbs()}
     out: dict = {}
-    for name in names:
+    for name in args.queries.split(",") if args.queries else []:
         runs, jobs = [], []
         for _ in range(max(1, args.repeats)):
-            before_jobs = len(sc.statusTracker().getJobIdsForGroup(None) or [])
+            j0 = next_job_id(spark)
             sc.setJobDescription(f"bench_extra:{name}")
             t0 = time.monotonic()
             queries[name](spark, sf_dir).write.mode("overwrite").format(
                 "noop"
             ).save()
             runs.append(round(time.monotonic() - t0, 3))
-            after_jobs = len(sc.statusTracker().getJobIdsForGroup(None) or [])
-            jobs.append(after_jobs - before_jobs)
+            jobs.append(next_job_id(spark) - j0)
             sc.setJobDescription(None)
         spark.catalog.clearCache()
         out[name] = {

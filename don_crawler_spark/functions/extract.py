@@ -27,9 +27,7 @@ from __future__ import annotations
 import functools
 import re
 
-import pandas as pd
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 # Go strings.TrimSpace trims runes with the Unicode White_Space property
 # (unicode.IsSpace): U+0009-U+000D, U+0020, U+0085, U+00A0, U+1680,
@@ -51,7 +49,7 @@ def _go_trim_space(line: str) -> str:
 def description_from_readme(contents: str) -> str:
     """Pure-Python port-of-semantics of crawler/crawler.go:671-696.
 
-    Single-row oracle; the vectorized path below must agree byte-for-byte.
+    Single-row oracle; the Catalyst columns below must agree byte-for-byte.
     """
     contents = contents.replace("\r\n", "\n")
     lines = contents.split("\n")
@@ -80,28 +78,6 @@ def is_readme_skippable_line(line: str) -> bool:
     return False
 
 
-def extract_description_series(html: pd.Series) -> pd.Series:
-    """Vectorized extractor over an Arrow batch.
-
-    Accepts binary (bytes) or string pages; bytes are decoded as UTF-8
-    (errors="replace" — the synthetic corpus is valid UTF-8, real crawl
-    data may not be, and a deterministic replacement keeps runs stable).
-    """
-    def _one(v: object) -> str | None:
-        if v is None:
-            return None
-        if isinstance(v, (bytes, bytearray)):
-            v = bytes(v).decode("utf-8", errors="replace")
-        return description_from_readme(v)
-
-    return html.map(_one)
-
-
-@F.pandas_udf(T.StringType())
-def extract_description_udf(html: pd.Series) -> pd.Series:
-    return extract_description_series(html)
-
-
 # ---------------------------------------------------------------------------
 # Link extraction — the "emit newly discovered URLs" half of the fetch stage.
 # The reference discovers work via provider listing APIs
@@ -120,34 +96,6 @@ def parse_links_py(html: str | bytes | None) -> list[str]:
     return _HREF_RE.findall(html)
 
 
-@F.pandas_udf(T.ArrayType(T.StringType()))
-def parse_links_udf(html: pd.Series) -> pd.Series:
-    return html.map(parse_links_py)
-
-
-# PERF: PySpark's pandas-UDF path for ArrayType RETURNS is ~8x slower than
-# for strings (measured 47s vs 6s over the same 500k-page scan — the
-# per-element list conversion dominates, not the regex). The hot path
-# therefore returns one RS-delimited string and splits JVM-side.
-LINK_SEP = "\x1e"
-
-
-@F.pandas_udf(T.StringType())
-def parse_links_joined_udf(html: pd.Series) -> pd.Series:
-    return html.map(
-        lambda v: LINK_SEP.join(parse_links_py(v)) if v is not None else None
-    )
-
-
-def links_col(html):
-    """array<string> of hrefs, via the fast string-return kernel."""
-    joined = parse_links_joined_udf(html)
-    return F.filter(
-        F.split(F.coalesce(joined, F.lit("")), LINK_SEP),
-        lambda x: x != "",
-    )
-
-
 # ---------------------------------------------------------------------------
 # JVM-native extraction — the hot path.
 #
@@ -155,15 +103,14 @@ def links_col(html):
 # the first blank line, join the length-preserved slot array) are fully
 # expressible as Catalyst expressions, so the payload column never has to
 # cross into Python at all: no Arrow serialization of html bytes, no Python
-# worker allocation churn, whole-stage codegen end to end. The pandas-UDF
-# kernels above remain the API surface for payloads that genuinely need
-# Python (and as the parity oracle); byte-for-byte agreement between the
-# two paths is pinned in tests/test_extract.py.
+# worker allocation churn, whole-stage codegen end to end. The Python
+# functions above are the parity oracles; byte-for-byte agreement with
+# them is pinned in tests/test_extract.py.
 #
-# Measured on the 500k-page bench corpus at local[16]: the pandas-UDF
-# extract spends ~80% of worker time in kernel page-fault handling on this
+# Measured on the 500k-page bench corpus at local[16], the former pandas-UDF
+# extract spent ~80% of worker time in kernel page-fault handling on this
 # microVM host (3.3 sys-cores vs 0.8 user-cores mid-run) because every
-# Arrow batch faults fresh pages for 6 KB html strings; the native column
+# Arrow batch faulted fresh pages for 6 KB html strings; the native column
 # does none of that.
 # ---------------------------------------------------------------------------
 
@@ -178,7 +125,7 @@ _GO_TRIM_RE = f"^{_GO_WS_CLASS}+|{_GO_WS_CLASS}+$"
 
 def html_string_col(html):
     """binary html -> UTF-8 string (U+FFFD replacement, like the Python
-    kernels' errors="replace"; the corpus is valid UTF-8 — on malformed
+    oracle's errors="replace"; the corpus is valid UTF-8 — on malformed
     input Java substitutes per maximal subsequence where Python replaces
     per byte, an accepted divergence documented here)."""
     return F.decode(html, "UTF-8")
@@ -307,7 +254,7 @@ def _x1_columns(html: str, binary: bool):
 
 def links_native_col(html, *, binary: bool = True):
     """href discovery as a JVM regexp scan (same matches as
-    ``parse_links_py``); null html -> empty array, like ``links_col``."""
+    ``parse_links_py``); null html -> empty array, as there."""
     s = html_string_col(html) if binary else html
     return F.coalesce(
         F.regexp_extract_all(s, F.lit('href="([^"]+)"'), F.lit(1)),

@@ -27,11 +27,12 @@ from pyspark.sql import functions as F
 def robots_allowed_py(
     rules: dict[str, list[tuple[str, bool]]], host: str, path: str
 ) -> bool:
-    """Oracle-side matcher. ``rules`` maps host -> [(path_prefix, allow)]."""
+    """Oracle-side matcher. ``rules`` maps host -> [(path_prefix, allow)];
+    a None ``path_prefix`` carries no rule, as in :func:`compile_rules`."""
     best_len = -1
     best_allow = True
     for prefix, allow in rules.get(host, []):
-        if path.startswith(prefix) and (
+        if prefix is not None and path.startswith(prefix) and (
             len(prefix) > best_len or (len(prefix) == best_len and allow)
         ):
             best_len = len(prefix)

@@ -37,10 +37,8 @@ from urllib.parse import (
     uses_relative,
 )
 
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 _DEFAULT_PORTS = {"http": "80", "https": "443"}
 
@@ -95,24 +93,6 @@ def url_host(url: str) -> str:
 def url_path(url: str) -> str:
     p = urlsplit(url).path
     return p if p else "/"
-
-
-# Python-worker forms of the oracle, kept for bench.py's UDF comparison
-# and test_udf_matches_python. Nothing on the crawl or query path calls
-# them.
-@F.pandas_udf(T.StringType())
-def canonicalize_url_udf(url: pd.Series) -> pd.Series:
-    return url.map(lambda u: canonicalize_url(u) if u is not None else None)
-
-
-@F.pandas_udf(T.StringType())
-def resolve_and_canonicalize_udf(href: pd.Series, base: pd.Series) -> pd.Series:
-    return pd.Series(
-        [
-            canonicalize_url(h, b) if h is not None else None
-            for h, b in zip(href, base)
-        ]
-    )
 
 
 # --- the canonicalization kernel: Spark SQL expressions only ---------------

@@ -11,7 +11,7 @@ wrong at 100 TB as the session's 2x-cores count is at sandbox scale.
 
 ``adaptive_partitions`` derives the count from Catalyst's own size
 estimate of the relation's optimized plan (the same statistic AQE's
-coalescing uses), targeting ``bytes_per_partition`` per task — so a
+coalescing uses), targeting ``BYTES_PER_PARTITION`` per task — so a
 0.5 MB synthetic host graph iterates on 1-partition relations while a
 multi-TB edge list gets thousands, from the same code path.
 """
@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame
 # ~64 MB per partition: the low end of the guide's 100 MB - 1 GB band,
 # chosen because loop relations are re-shuffled every iteration (smaller
 # partitions bound per-task state for the in-loop sorts/aggregations).
-DEFAULT_BYTES_PER_PARTITION = 64 * 1024 * 1024
+BYTES_PER_PARTITION = 64 * 1024 * 1024
 
 
 def plan_size_bytes(df: DataFrame) -> int | None:
@@ -42,25 +42,14 @@ def plan_size_bytes(df: DataFrame) -> int | None:
     return size
 
 
-def adaptive_partitions(
-    df: DataFrame,
-    bytes_per_partition: int = DEFAULT_BYTES_PER_PARTITION,
-    lo: int = 1,
-    hi: int | None = None,
-) -> int:
-    """Partition count for a relation derived from its estimated size.
+def adaptive_partitions(df: DataFrame) -> int:
+    """Partition count for a relation derived from its estimated size,
+    at least 1.
 
     Falls back to ``defaultParallelism`` when stats are unavailable, so
     an unknown-size relation never collapses to one partition.
     """
-    spark = df.sparkSession
-    fallback = spark.sparkContext.defaultParallelism
     size = plan_size_bytes(df)
     if size is None:
-        n = fallback
-    else:
-        n = (size + bytes_per_partition - 1) // bytes_per_partition
-    n = max(lo, n)
-    if hi is not None:
-        n = min(hi, n)
-    return int(n)
+        return df.sparkSession.sparkContext.defaultParallelism
+    return max(1, (size + BYTES_PER_PARTITION - 1) // BYTES_PER_PARTITION)

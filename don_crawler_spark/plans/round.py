@@ -107,7 +107,7 @@ class RoundOutput:
     fetched_full: DataFrame
     new_frontier: DataFrame  # FRONTIER_COLS
     # the round's caches, dependents first: dropping one re-plans no other
-    persisted: tuple[DataFrame, ...] = ()
+    persisted: tuple[DataFrame, ...]
 
 
 def frontier_from_seeds(seeds: DataFrame) -> DataFrame:
@@ -325,7 +325,6 @@ def run_round(
     hosts: DataFrame,
     urls: DataFrame,
     n_frontier: int,
-    persist: bool = True,
 ) -> RoundOutput:
     """Build the round-``rnd`` DAG. Nothing is executed here: the driver
     runs the round's jobs when it writes the outputs to the checkpoint.
@@ -365,12 +364,11 @@ def run_round(
         .join(F.broadcast(hosts), "host", "left")
         .filter(c.robots)
         .select(*c.ranked)
-    )
-    if persist:
         # selected (twice: the cell counts below and the rows
         # themselves) and deferred (the next frontier) all branch off
         # the budget window; cache it so it runs once per round
-        ranked = ranked.persist()
+        .persist()
+    )
     selected = ranked.filter(c.in_budget)
     deferred = ranked.filter(c.over_budget)
 
@@ -420,8 +418,7 @@ def run_round(
     #
     # GUARD: if the native expressions are unavailable the plan falls
     # back to the un-pruned scan: degraded cost, same rows.
-    if persist:
-        selected = selected.persist()
+    selected = selected.persist()
     p = pages.select(*c.pages)
     n_items = max(1, n_frontier)
     maybe_sel = native_bloom.bloom_membership_col(
@@ -449,15 +446,14 @@ def run_round(
     )
 
     # The driver materializes the outputs of this DAG; without a cache
-    # each write would re-execute the joins/windows/UDFs from scratch.
+    # each write would re-execute the joins, windows and extraction.
     # A round holds three caches (the driver drops them once the round's
     # outputs are written): ``ranked``, read by the sequence arithmetic
     # and by the deferred branch of the next frontier; the post-sequence
     # ``selected``, read by the fetch join and its pages prune; and
     # ``enriched``, read by every output (fetched_full, the metrics
     # aggregate over it, and the links and retries of the next frontier).
-    if persist:
-        enriched = enriched.persist()
+    enriched = enriched.persist()
 
     # ONE fact table per round; trace / fetched / seen_delta are read-time
     # projections (CheckpointStore._VIRTUAL) — the row set is identical.
@@ -497,5 +493,5 @@ def run_round(
     return RoundOutput(
         fetched_full=fetched_full,
         new_frontier=new_frontier,
-        persisted=(enriched, selected, ranked) if persist else (),
+        persisted=(enriched, selected, ranked),
     )

@@ -1,8 +1,10 @@
 """SparkSession factory with the engine's scale-oriented defaults.
 
-Local mode here stands in for a multi-executor cluster: partitioning,
-AQE, and Arrow settings are chosen so the same plans hold at 1000
-executors (see README "Scale notes").
+``local[cpus]`` stands in for a cluster: partitioning, AQE, broadcast
+and codegen settings are chosen so the same plans hold at 1000
+executors (see README "Scale notes"). A crawl runs no Python worker;
+the package is still shipped with every session because the query
+suite's pandas UDFs import it on the workers.
 """
 
 from __future__ import annotations
@@ -36,42 +38,18 @@ def get_spark(
     cpus: int | None = None,
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
-    executors: int | None = None,
-    executor_mem_mb: int = 4096,
 ) -> SparkSession:
     """Build (or fetch) the session.
 
     ``cpus`` defaults to ``$SPARK_GRAFT_CPUS`` (fallback: all cores).
-    ``shuffle_partitions`` defaults to 2x cpus locally; on a real cluster
-    this would be sized to ~128MB of shuffle data per partition and AQE
-    coalesces downward at runtime.
-
-    ``executors``: when set, run ``local-cluster[executors, cpus, mem]``
-    — real executor JVM PROCESSES instead of driver threads. This is the
-    sandbox analog of "N executors vs 4N executors" (the north rule's
-    scaling criterion): separate processes isolate per-process kernel
-    memory-throttling the way real cluster executors do, which
-    ``local[N]`` threads cannot (measured: this host caps a single
-    process's page-dirtying rate; threads share the cap, processes each
-    get their own). ``cpus`` then means cores PER executor.
+    ``shuffle_partitions`` defaults to 2x cpus (at least 32); on a real
+    cluster this would be sized to ~128MB of shuffle data per partition
+    and AQE coalesces downward at runtime.
     """
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
     if shuffle_partitions is None:
-        total_cores = cpus * (executors or 1)
-        shuffle_partitions = max(32, 2 * total_cores)
-    if executors is not None:
-        # local-cluster needs SPARK_HOME and an explicit python for the
-        # executor-side workers
-        import pyspark
-
-        os.environ.setdefault("SPARK_HOME", os.path.dirname(pyspark.__file__))
-        import sys
-
-        os.environ.setdefault("PYSPARK_PYTHON", sys.executable)
-        master = f"local-cluster[{executors},{cpus},{executor_mem_mb}]"
-    else:
-        master = f"local[{cpus}]"
+        shuffle_partitions = max(32, 2 * cpus)
     # 16g (not larger): the heap is committed+pre-touched up front (see
     # below), and pre-touch costs wall time proportional to heap size on
     # this host. 16g comfortably fits 32 concurrent columnar-scan tasks
@@ -106,7 +84,7 @@ def get_spark(
         os.environ.setdefault(k, v)
 
     builder = (
-        SparkSession.builder.master(master)
+        SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         # AQE: runtime coalescing + skew-join splitting. At crawl scale a
@@ -140,28 +118,17 @@ def get_spark(
             + (extra_conf or {}).get("spark.driver.memory", driver_mem)
             + " -XX:+AlwaysPreTouch",
         )
-        # executors get the same fixed pre-touched heap as the driver
-        # (-Xms = executor memory): without it G1 grows/uncommits the
-        # heap under scan churn and every re-commit pays this host's
-        # pathological page-fault cost (see the driver note above)
-        .config(
-            "spark.executor.extraJavaOptions",
-            (f"-Xms{executor_mem_mb}m " if executors is not None else "")
-            + "-XX:+AlwaysPreTouch",
-        )
+        # executors pre-touch their heap too (see the driver note above);
+        # a cluster sets their -Xms to spark.executor.memory
+        .config("spark.executor.extraJavaOptions", "-XX:+AlwaysPreTouch")
         # broadcastTimeout: the 300s default is a hang detector, not a
         # budget — but a broadcast value may sit at the end of a long
         # compute pipeline (a round's sequence offsets aggregate the
-        # whole budget-ranked selection before they broadcast). On the
-        # 2-core scaling-bench executors (executors != None) a legitimate
-        # build can take a long time -> 3600; normal sessions get 1200:
+        # whole budget-ranked selection before they broadcast). 1200 is
         # still a working hang detector (r3 ADVICE), but with headroom
         # for a legitimate build caught in this host's documented 6x
         # write-throttle swings.
-        .config(
-            "spark.sql.broadcastTimeout",
-            "3600" if executors is not None else "1200",
-        )
+        .config("spark.sql.broadcastTimeout", "1200")
         .config("spark.ui.enabled", "false")
         .config("spark.executorEnv.PYTHONMALLOC", worker_env["PYTHONMALLOC"])
         .config(
@@ -212,8 +179,6 @@ def get_spark(
         # Static conf: the JVM reads it once.
         .config("spark.sql.codegen.cache.maxEntries", "1000")
     )
-    if executors is not None:
-        builder = builder.config("spark.executor.memory", f"{executor_mem_mb}m")
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()

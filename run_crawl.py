@@ -5,7 +5,6 @@ Local smoke:
     python run_crawl.py --corpus <dir> --checkpoint <dir> --rounds 8
 
 Cluster (the packaging the engine is built for):
-    python -c "from don_crawler_spark.session import _ship_package" # or:
     cd <repo> && zip -r /tmp/don_crawler_spark.zip don_crawler_spark
     spark-submit --py-files /tmp/don_crawler_spark.zip \\
         --conf spark.sql.adaptive.enabled=true \\

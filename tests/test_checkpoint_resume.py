@@ -124,9 +124,11 @@ def test_round_handles_hosts_missing_from_either_table(spark, tmp_path) -> None:
     )
     seen = _empty_seen(spark, str(tmp_path / "seen"))
     out = run_round(cfg, rnd, frontier, seen,
-                    *load_corpus(spark, str(corpus)), len(rows), persist=False)
+                    *load_corpus(spark, str(corpus)), len(rows))
     fetched = out.fetched_full.select("url", "host", "status").collect()
     deferred = {r["url"] for r in out.new_frontier.collect()}
+    for df in out.persisted:  # release the round's caches, as run_crawl does
+        df.unpersist()
     assert {r["status"] for r in fetched} == {404}
 
     selected = {r["url"] for r in fetched}
@@ -162,8 +164,10 @@ def test_zero_delay_or_cap_means_default(spark, tmp_path) -> None:
     rows, frontier = _frontier(spark, budgets, [f"/p{i}" for i in range(80)])
     seen = _empty_seen(spark, str(tmp_path / "seen"))
     out = run_round(cfg, 1, frontier, seen,
-                    *load_corpus(spark, str(corpus)), len(rows), persist=False)
+                    *load_corpus(spark, str(corpus)), len(rows))
     fetched = out.fetched_full.select("host").collect()
+    for df in out.persisted:  # release the round's caches, as run_crawl does
+        df.unpersist()
     got = {h: sum(r["host"] == h for r in fetched) for h in budgets}
     want = {h: cfg.host_budget(*b, 1) for h, b in budgets.items()}
     assert want == {"zero-delay.example": 10, "zero-cap.example": 60}
@@ -371,6 +375,68 @@ def test_status_chain_matches_oracle_differentially(spark) -> None:
         )
     assert bad == []
     assert statuses == {200, 301, 404, 503}
+
+
+def test_robots_col_matches_oracle_differentially(spark) -> None:
+    """``compile_rules`` + ``robots_allowed_col`` equal ``robots_allowed_py``
+    on seeded rule sets and paths: overlapping allow and deny prefixes,
+    one prefix with both verdicts (the length tie goes to allow), the
+    empty prefix, %-escapes and non-ASCII characters; hosts with no
+    robots rows, and rows with a null ``path_prefix`` (no rule)."""
+    import random
+
+    from pyspark.sql import functions as F
+
+    from don_crawler_spark.functions.robots import (
+        compile_rules,
+        robots_allowed_col,
+        robots_allowed_py,
+    )
+
+    rng = random.Random(20261022)
+    segments = ["", "/", "a", "ab", "/a", "/a/", "b", "%2F", "%2f", "%E2%82%AC",
+                "€", "é", "e\u0301", "日本", "%", "%20", " ", "?q=1", "\U0001f600"]
+
+    def gen(k: int) -> str:
+        return "".join(rng.choice(segments) for _ in range(k))
+
+    hosts = [f"h{h}.example" for h in range(120)]
+    rules: dict[str, list] = {}
+    for host in hosts[1:]:  # hosts[0] has no robots rows
+        rs = rules[host] = [(None, rng.random() < 0.5)]  # a row with no rule
+        for _ in range(rng.randrange(0, 8)):
+            prefix = (rng.choice(["", "/"]) if rng.random() < 0.2
+                      else "/" + gen(rng.randrange(1, 4)))
+            rs.append((prefix, rng.random() < 0.5))
+            if rng.random() < 0.3:  # the same prefix with both verdicts
+                rs.append((prefix, not rs[-1][1]))
+    rows = []
+    for i in range(6000):
+        host = rng.choice(hosts)
+        # half the paths extend one of the host's own prefixes
+        own = [p for p, _ in rules.get(host, []) if p is not None]
+        base = rng.choice(own) if own and rng.random() < 0.5 else "/"
+        rows.append((i, host, base + gen(rng.randrange(4))))
+    robots = spark.createDataFrame(
+        [(h, p, a) for h, rs in rules.items() for p, a in rs],
+        "host string, path_prefix string, allow boolean",
+    )
+    got = dict(
+        spark.createDataFrame(rows, "i int, host string, path string")
+        .join(compile_rules(robots), "host", "left")
+        .select("i", robots_allowed_col(F.col("rules"), F.col("path")))
+        .collect()
+    )
+    bad = [(h, p, got[i]) for i, h, p in rows
+           if got[i] != robots_allowed_py(rules, h, p)]
+    assert bad == []
+    # the generator reaches both verdicts, the length tie and the empty prefix
+    allowed = sum(robots_allowed_py(rules, h, p) for _, h, p in rows)
+    assert 0.1 * len(rows) < allowed < 0.9 * len(rows)
+    assert any(("", False) in rs for rs in rules.values())
+    assert any(
+        (p, True) in rs and (p, False) in rs for rs in rules.values() for p, _ in rs
+    )
 
 
 def test_new_round_reuses_compiled_code(spark, tmp_path) -> None:

@@ -8,12 +8,10 @@ derived directly from the Go control flow.
 
 from __future__ import annotations
 
-import pandas as pd
 import pytest
 
 from don_crawler_spark.functions.extract import (
     description_from_readme,
-    extract_description_series,
     is_readme_skippable_line,
     parse_links_py,
 )
@@ -56,23 +54,6 @@ def test_description_from_readme(contents: str, expected: str) -> None:
     assert got == expected, (got.encode(), expected.encode())
 
 
-def test_vectorized_matches_scalar() -> None:
-    inputs = [c for c, _ in CASES]
-    out = extract_description_series(pd.Series(inputs, dtype=object))
-    for inp, got in zip(inputs, out):
-        want = description_from_readme(inp)
-        assert got == want
-        assert got.encode("utf-8") == want.encode("utf-8")
-
-
-def test_vectorized_accepts_bytes_and_none() -> None:
-    s = pd.Series([b"a\r\nb", None, "c"], dtype=object)
-    out = extract_description_series(s)
-    assert out[0] == "a b"
-    assert out[1] is None
-    assert out[2] == "c"
-
-
 def test_skippable_line_predicate() -> None:
     # crawler/crawler.go:698-714 (tested even though dead in the reference)
     assert is_readme_skippable_line("# h")
@@ -91,22 +72,6 @@ def test_parse_links() -> None:
     assert parse_links_py(html.encode()) == ["https://a.example/x", "/rel"]
 
 
-def test_spark_udf_byte_parity(spark) -> None:
-    """The Arrow-batched UDF output is byte-identical to the Python oracle."""
-    from pyspark.sql import functions as F
-
-    from don_crawler_spark.functions.extract import extract_description_udf
-
-    inputs = [c for c, _ in CASES] + ["x\n" * 1000, "y " * 5000]
-    df = spark.createDataFrame([(i, c) for i, c in enumerate(inputs)], ["i", "html"])
-    got = {
-        r["i"]: r["t"]
-        for r in df.select("i", extract_description_udf(F.col("html")).alias("t")).collect()
-    }
-    for i, inp in enumerate(inputs):
-        assert got[i].encode("utf-8") == description_from_readme(inp).encode("utf-8")
-
-
 def test_native_col_byte_parity(spark) -> None:
     """The JVM-native extractor column (the hot path — no Python) is
     byte-identical to the Python oracle on every hand case plus
@@ -118,14 +83,19 @@ def test_native_col_byte_parity(spark) -> None:
     inputs = [c for c, _ in CASES] + [
         "\n", "\n\n", "a\n\n\n", "a\nb\nc\nd\n\n\n\n", "x\n" * 200,
         "\r\n", "  \n", "a\n \nb\n\nc", "　full-width\nnext",
+        "x\n" * 1000, "y " * 5000,
     ]
-    df = spark.createDataFrame([(i, c) for i, c in enumerate(inputs)], ["i", "html"])
+    df = spark.createDataFrame(
+        [(i, c) for i, c in enumerate(inputs)] + [(len(inputs), None)],
+        "i int, html string",
+    )
     got = {
         r["i"]: r["t"]
         for r in df.select(
             "i", extract_description_col(F.col("html"), binary=False).alias("t")
         ).collect()
     }
+    assert got.pop(len(inputs)) is None  # NULL html -> NULL text
     for i, inp in enumerate(inputs):
         want = description_from_readme(inp)
         assert got[i].encode("utf-8") == want.encode("utf-8"), (
@@ -190,7 +160,8 @@ def test_native_col_binary_input(spark) -> None:
         links_native_col,
     )
 
-    rows = [(0, 'pre\n<a href="u">u</a>\n\ntail'.encode()), (1, None)]
+    rows = [(0, 'pre\n<a href="u">u</a>\n\ntail'.encode()), (1, None),
+            (2, b"a\r\nb")]
     schema = T.StructType([
         T.StructField("i", T.IntegerType()),
         T.StructField("html", T.BinaryType()),
@@ -207,6 +178,7 @@ def test_native_col_binary_input(spark) -> None:
     assert out[0][0] == description_from_readme(rows[0][1].decode())
     assert out[0][1] == ['u']
     assert out[1] == (None, [])
+    assert out[2] == ("a b", [])
 
 
 def test_staged_extractor_byte_parity(spark) -> None:

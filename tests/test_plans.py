@@ -32,6 +32,15 @@ def _python_nodes(plan: str) -> list[str]:
     return [line for line in plan.splitlines() if any(n in line for n in nodes)]
 
 
+def _uncached(out):
+    """Release a round's caches, as ``run_crawl`` does after its writes,
+    before any plan of it is read: the plans then show the round's DAG
+    itself, not InMemoryTableScans over it."""
+    for df in out.persisted:
+        df.unpersist()
+    return out
+
+
 def test_j1_broadcasts_the_dimension(spark) -> None:
     import __spark_entry__ as em
 
@@ -94,10 +103,10 @@ def test_fetch_join_never_shuffles_pages(spark, tmp_path) -> None:
     n_frontier = store.row_count(0, "frontier")
     assert n_frontier == frontier.count()
 
-    out = run_round(
+    out = _uncached(run_round(
         CrawlConfig(), 1, frontier, _empty_seen(spark, str(tmp_path / "seen")),
-        *load_corpus(spark, corpus), n_frontier, persist=False,
-    )
+        *load_corpus(spark, corpus), n_frontier,
+    ))
     plan = _plan(out.fetched_full)
     assert "ShuffledHashJoin" in plan
     # no broadcast-semi prune of pages (the broadcasts that remain are
@@ -129,10 +138,10 @@ def test_fetch_join_degrades_to_shuffle_hash_over_threshold(spark, tmp_path) -> 
     frontier = frontier_from_seeds(spark.read.parquet(f"{corpus}/seeds.parquet"))
 
     def fetched(n_frontier):
-        return run_round(
+        return _uncached(run_round(
             CrawlConfig(), 1, frontier, _empty_seen(spark, str(tmp_path / "seen")),
-            *load_corpus(spark, corpus), n_frontier, persist=False,
-        ).fetched_full
+            *load_corpus(spark, corpus), n_frontier,
+        )).fetched_full
 
     exact, huge = fetched(frontier.count()), fetched(10**9)
     plan = _plan(huge)
@@ -173,7 +182,7 @@ def test_no_python_udf_in_native_queries(spark) -> None:
         assert _python_nodes(_plan(em.queries()[name](spark, SF))) == [], name
 
 
-def _round_on_fixture(spark, tmp_path, cfg, persist: bool):
+def _round_on_fixture(spark, tmp_path, cfg):
     """Round 1 over the 150-page / 6-host corpus, against a one-row seen
     set (an empty one would let Catalyst drop the anti-join), built in
     the JVM like every input of a crawl."""
@@ -193,7 +202,6 @@ def _round_on_fixture(spark, tmp_path, cfg, persist: bool):
         ),
         *load_corpus(spark, corpus),
         frontier.count(),
-        persist=persist,
     )
 
 
@@ -217,8 +225,8 @@ def test_enriched_round_plan_has_no_python_udf(spark, tmp_path) -> None:
 
     from don_crawler_spark.plans.config import CrawlConfig
 
-    out = _round_on_fixture(
-        spark, tmp_path, CrawlConfig(enrich_fetched=True), persist=False
+    out = _uncached(
+        _round_on_fixture(spark, tmp_path, CrawlConfig(enrich_fetched=True))
     )
     for df in (out.fetched_full, out.new_frontier):
         assert _python_nodes(_plan(df)) == []
@@ -312,7 +320,7 @@ def test_round_materializes_three_caches(spark, tmp_path) -> None:
 
     spark.catalog.clearCache()
     before = set(spark.sparkContext._jsc.getPersistentRDDs().keys())
-    out = _round_on_fixture(spark, tmp_path, CrawlConfig(), persist=True)
+    out = _round_on_fixture(spark, tmp_path, CrawlConfig())
     out.fetched_full.write.parquet(str(tmp_path / "fetched_full"))
     out.new_frontier.write.parquet(str(tmp_path / "frontier"))
     after = set(spark.sparkContext._jsc.getPersistentRDDs().keys())
@@ -326,7 +334,7 @@ def test_seen_check_runs_on_new_links_only(spark, tmp_path) -> None:
     deferred and retry rows cannot be seen (run_round's INVARIANT)."""
     from don_crawler_spark.plans.config import CrawlConfig
 
-    out = _round_on_fixture(spark, tmp_path, CrawlConfig(), persist=False)
+    out = _uncached(_round_on_fixture(spark, tmp_path, CrawlConfig()))
     analyzed = out.new_frontier._jdf.queryExecution().analyzed()
     assert analyzed.nodeName() == "Repartition"  # the coalesce
     union = analyzed.children().apply(0)
@@ -372,7 +380,7 @@ def test_round_joins_each_dimension_once(spark, tmp_path) -> None:
     directly above another on the same key in the executed plan."""
     from don_crawler_spark.plans.config import CrawlConfig
 
-    out = _round_on_fixture(spark, tmp_path, CrawlConfig(), persist=False)
+    out = _uncached(_round_on_fixture(spark, tmp_path, CrawlConfig()))
     plan = _final_plan(out.fetched_full)
     for key in ("host", "url"):
         assert "BroadcastHashJoin [" + key + "#" in plan, key
@@ -386,12 +394,12 @@ def test_fetch_falls_back_to_unpruned_scan(spark, tmp_path, monkeypatch) -> None
     from don_crawler_spark.plans.config import CrawlConfig
 
     cols = ["url", "status", "seq_in_round", "text"]
-    pruned = _round_on_fixture(spark, tmp_path / "a", CrawlConfig(), persist=False)
+    pruned = _uncached(_round_on_fixture(spark, tmp_path / "a", CrawlConfig()))
     assert "might_contain" in _plan(pruned.fetched_full)
     want = sorted(map(tuple, pruned.fetched_full.select(*cols).collect()))
 
     monkeypatch.setattr(native_bloom, "bloom_membership_col", lambda *a: None)
-    unpruned = _round_on_fixture(spark, tmp_path / "b", CrawlConfig(), persist=False)
+    unpruned = _uncached(_round_on_fixture(spark, tmp_path / "b", CrawlConfig()))
     assert "might_contain" not in _plan(unpruned.fetched_full)
     got = sorted(map(tuple, unpruned.fetched_full.select(*cols).collect()))
     assert got == want and len(got) > 0
@@ -453,8 +461,8 @@ def test_round_plan_has_no_unpartitioned_window(spark) -> None:
     seeds = spark.read.parquet(f"{corpus}/seeds.parquet")
     frontier = frontier_from_seeds(seeds)
     seen = spark.createDataFrame([], "url_hash long, url string, first_round int")
-    out = run_round(CrawlConfig(), 1, frontier, seen, *load_corpus(spark, corpus),
-                    frontier.count(), persist=False)
+    out = _uncached(run_round(CrawlConfig(), 1, frontier, seen,
+                              *load_corpus(spark, corpus), frontier.count()))
     n_windows = 0
     for df in (out.fetched_full, out.new_frontier):
         nodes = json.loads(df._jdf.queryExecution().optimizedPlan().toJSON())

@@ -77,20 +77,6 @@ def test_host_path() -> None:
     assert url_path("https://example.org") == "/"
 
 
-def test_udf_matches_python(spark) -> None:
-    from pyspark.sql import functions as F
-
-    from don_crawler_spark.functions.urls import canonicalize_url_udf
-
-    raws = [c for c, _ in CANON_CASES]
-    df = spark.createDataFrame([(r,) for r in raws], ["u"]).select(
-        "u", canonicalize_url_udf(F.col("u")).alias("c")
-    )
-    got = {r["u"]: r["c"] for r in df.collect()}
-    for raw, want in CANON_CASES:
-        assert got[raw] == want
-
-
 def test_jvm_host_path_cols_match_python(spark) -> None:
     from pyspark.sql import functions as F
 
@@ -221,7 +207,7 @@ def test_abs_hybrid_matches_python(spark) -> None:
         "https://h:443/p", "https://u:pw@h/p", "https://h/a/../b",
         "  https://h/sp  ", "https://ünïcode.example/p", "",
         "https://h/p ", "ftp://files.example/x",
-    ]
+    ] + [raw for raw, _ in CANON_CASES]
     df = spark.createDataFrame(
         [(i, u) for i, u in enumerate(urls)], ["i", "u"]
     )
